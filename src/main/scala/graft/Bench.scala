@@ -240,6 +240,11 @@ object Bench {
         // references them (each bench run re-invokes the query fn), so
         // release them explicitly or they accumulate across the suite
         // (r11; untimed, between measurements — methodology unchanged).
+        // Invariant: no frame may outlive a query run. The sweep drops
+        // every persisted block, also those a caller still owns (a
+        // `CovidPipeline.Result` before its `release`) and those that ARE
+        // a locally-checkpointed frame's data, so a frame held across runs
+        // would recompute or fail with "checkpoint block not found".
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         // second untimed gc AFTER the cache clear: unpersisted blocks and

@@ -55,7 +55,7 @@ object Verify {
         spark.catalog.clearCache() // q20/q44 persist() intermediates
         // localCheckpoint RDD caches are outside clearCache's reach and
         // otherwise live until a driver GC notices them (Bench has the
-        // same release; see its comment)
+        // same release and its invariant: no frame may outlive a query run)
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
       }

@@ -22,14 +22,26 @@ object Quality {
   def withinTolerance(actual: Double, expected: Double, tolerance: Double): Boolean =
     math.abs(actual - expected) <= tolerance * expected
 
-  /** A1+A2: filtered COUNT with relative-tolerance assertion; throws on
-    * failure (the reference fails the Airflow task; we fail the pipeline). */
-  def countGate(df: DataFrame, expected: Long, tolerance: Double): Long = {
-    val actual = df.count()
+  /** The gate's decision on a count already taken: returns `actual` when it
+    * is within `tolerance` of `expected`, throws [[QualityCheckFailure]]
+    * otherwise. Every count gate below throws through here. */
+  def checkCount(actual: Long, expected: Long, tolerance: Double): Long = {
     if (!withinTolerance(actual.toDouble, expected.toDouble, tolerance))
       throw QualityCheckFailure(actual.toDouble, expected.toDouble, tolerance)
     actual
   }
+
+  /** A1+A2: filtered COUNT with relative-tolerance assertion; throws on
+    * failure (the reference fails the Airflow task; we fail the pipeline). */
+  def countGate(df: DataFrame, expected: Long, tolerance: Double): Long =
+    checkCount(df.count(), expected, tolerance)
+
+  /** [[countGate]] without its own job: the count is the `n_rows` metric of
+    * a [[withObservedStats]] Observation, so the action that filled `obs`
+    * must have completed (`obs.get` blocks until it has). */
+  def observedCountGate(obs: org.apache.spark.sql.Observation, expected: Long,
+                        tolerance: Double): Long =
+    checkCount(obs.get("n_rows").asInstanceOf[Long], expected, tolerance)
 
   /** Zero-extra-pass quality metrics via the [[org.apache.spark.sql.Observation]]
     * API: attaches row count + per-column null counts to `df` so they are

@@ -1,0 +1,91 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import graft.ops.{CovidOps, Dims, Mart}
+import graft.pipeline.CovidPipeline
+import graft.quality.Quality
+import graft.sources.{CovidPayloadProvider, FixturePayloadProvider}
+
+/** The fixture provider, counting every fetch in a JVM-wide counter (the
+  * connector instantiates providers reflectively, once per partition
+  * reader, so the count cannot live on an instance). */
+final class CountingPayloadProvider extends CovidPayloadProvider {
+  private val fixture = new FixturePayloadProvider
+  override def fetch(ds: String, iso: String, country: String,
+                     countryIdx: Int, provinces: Int): String = {
+    CountingPayloadProvider.calls.incrementAndGet()
+    fixture.fetch(ds, iso, country, countryIdx, provinces)
+  }
+}
+
+object CountingPayloadProvider {
+  val calls = new AtomicLong
+}
+
+/** Each date is extracted once, gated from that one extract, loaded as one
+  * file, and leaves no landed block behind. */
+class CovidLandingSpec extends SparkSpec {
+
+  private def counted(ds: String): DataFrame =
+    spark.read.format("graft.sources.CovidReportSource")
+      .option("date", ds)
+      .option("payloadProvider", classOf[CountingPayloadProvider].getName)
+      .load()
+
+  private def freshLake(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).resolve("fact").toString
+
+  /** Persisted RDD ids and whether any DataFrame cache entry exists: what a
+    * landed date would leave behind if it outlived its write. */
+  private def cacheState = (spark.sparkContext.getPersistentRDDs.keySet,
+    spark.sharedState.cacheManager.isEmpty)
+
+  test("runRange fetches each (date, country) once: 5 per date, 15 over 3 dates") {
+    CountingPayloadProvider.calls.set(0)
+    val landed = CovidPipeline.runRange(spark, "2023-03-01", "2023-03-03",
+      freshLake("graft_fetches"), counted)
+    assert(landed.size === 3)
+    assert(CountingPayloadProvider.calls.get === 15)
+  }
+
+  test("a date whose gate fails is fetched once too") {
+    CountingPayloadProvider.calls.set(0)
+    intercept[Quality.QualityCheckFailure] {
+      CovidPipeline.runRange(spark, "2023-03-01", "2023-03-01",
+        freshLake("graft_fetches_fail"), counted, expectedRows = 9999)
+    }
+    assert(CountingPayloadProvider.calls.get === 5)
+  }
+
+  test("no landed block outlives its date, on success and on a failed gate") {
+    spark.sharedState.cacheManager.clearCache() // entries of earlier suites
+    val before = cacheState
+    CovidPipeline.runRange(spark, "2023-03-01", "2023-03-02", freshLake("graft_release"))
+    assert(cacheState === before)
+    intercept[Quality.QualityCheckFailure] {
+      CovidPipeline.runRange(spark, "2023-03-01", "2023-03-02",
+        freshLake("graft_release_fail"), expectedRows = 9999)
+    }
+    assert(cacheState === before)
+  }
+
+  test("the landed partition equals the unlanded composition, in one file") {
+    // through the connector: one input partition per country, so one file
+    // per date is the pipeline's doing (the fixture stage is one partition)
+    val ds = "2023-03-02"
+    val lake = freshLake("graft_equiv")
+    CovidPipeline.runRange(spark, ds, ds, lake, counted)
+    val f = CovidOps.flatten(counted(ds), ds)
+    val expected = Mart.factCovid(Mart.withSurrogateKeys(f, Dims.regionDim(f)))
+    val got = spark.read.parquet(lake)
+      .filter(col("day_of_data") === lit(ds).cast("date"))
+      .select(expected.columns.map(col): _*)
+    assert(got.count() === 240)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+    val parts = new java.io.File(s"$lake/day_of_data=$ds").listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1)
+  }
+}

@@ -49,4 +49,15 @@ class QualitySpec extends SparkSpec {
     }
     assert(e.actual === 100.0)
   }
+
+  test("checkCount: the gate's pure decision, at the reference's 240 +- 2% edges") {
+    assert(Quality.checkCount(244, 240, 0.02) === 244)
+    assert(Quality.checkCount(236, 240, 0.02) === 236)
+    val e = intercept[Quality.QualityCheckFailure] {
+      Quality.checkCount(245, 240, 0.02)
+    }
+    assert(e === Quality.QualityCheckFailure(245.0, 240.0, 0.02))
+    assert(e.getMessage ===
+      "quality check failed: actual=245.0 not within 2.0% of expected=240.0")
+  }
 }
