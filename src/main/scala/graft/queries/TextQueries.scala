@@ -1186,7 +1186,10 @@ object TextQueries {
     // corpus-wide collision count with ONE base pass and ONE exchange
     // (measured at the 100× rung: 43.7 s / 586 cpu-s → see after-plan;
     // 16 → 10 Exchanges, 8 → 4 parquet scans).
-    val cells = base
+    // NULL keys (NULL text) are dropped first: the groupBy + inner-join
+    // form and the oracle's `JOIN ... USING (k)` never match them, while
+    // a window would count them as one corpus-wide partition.
+    val cells = base.filter(col("k").isNotNull)
       .withColumn("kc", count(lit(1)).over(Window.partitionBy(col("k"))))
       .groupBy(col("source"), col("lang"))
       .agg(
@@ -1530,6 +1533,12 @@ object TextQueries {
       .select(col("doc_id"), array_sort(array_distinct(col("sh"))).as("s"))
       .filter(size(col("s")) > 0)
 
+  /** `dfcap=auto`'s log2 band of a positive df, floor(log2(df)), computed
+    * in integer space as `bit length - 1`: a floating-point
+    * `floor(log(2, df))` rounds near powers of two (Long.MaxValue lands in
+    * band 63). */
+  private[graft] def dfBand(df: Column): Column = (length(bin(df)) - 1).cast("int")
+
   /** q126 core over a caller-managed (persisted) sorted-shingle frame.
     *
     * Formulation: exact set-similarity join by COUNTING CO-OCCURRENCES in
@@ -1637,8 +1646,7 @@ object TextQueries {
           val dfF = post0.groupBy(col("g")).agg(count(lit(1)).as("df"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           val bands = dfF
-            .groupBy(floor(log(2.0, col("df").cast("double"))).cast("int")
-              .as("band"))
+            .groupBy(dfBand(col("df")).as("band"))
             .agg(sum(col("df")).as("n_b"),
               sum(col("df") * col("df")).as("s2_b"))
             .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))

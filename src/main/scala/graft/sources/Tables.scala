@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated fixture tables
   * (`/root/testdata/sf*`; see TESTDATA.md).
@@ -10,6 +14,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * filter/select on the returned frame (never collect) so pushdown reaches the
   * scan. At production scale these would be date-partitioned directories; the
   * loader API stays the same.
+  *
+  * Schema memo: a parquet read without a schema makes Spark infer one, and
+  * Spark 4.1 does that with a one-task job (`mergeSchemasInParallel`) that
+  * reads a footer — even for a single file with `mergeSchema` off. A query
+  * loads up to all 10 tables (`registerAll`), so that job dominated short
+  * queries' construction time. Each table path's schema is therefore
+  * inferred once, by Spark itself, and handed to every later read as
+  * `.schema(s)`; each load still builds a fresh relation with fresh
+  * expression ids. The entry is keyed by everything inference reads: the
+  * reader options, every session conf whose key contains `parquet` (e.g.
+  * `nanosAsLong`, set by [[events]]) plus `ignoreCorruptFiles`, and the
+  * table directory's (name, length, mtime) listing — so a table rewritten
+  * in place is inferred again. One entry per path (a new key replaces the
+  * old), so the memo is bounded by the number of distinct table paths.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -69,7 +87,7 @@ object Tables {
           }.toMap
         finally in.close()
       }
-      val schemaDdl = spark.read.parquet(path).schema.toDDL
+      val schemaDdl = parquet(spark, path).schema.toDDL
       spark.sql(
         s"""CREATE TABLE $ident ($schemaDdl) USING parquet
            |CLUSTERED BY (${props("bucketBy")})
@@ -83,9 +101,50 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.conf.getOption(BucketedPrefix + name) match {
       case Some(path) => bucketedTable(spark, name, path)
-      case None =>
-        spark.read.options(readOptions(spark)).parquet(tablePath(sfDir, name))
+      case None => parquet(spark, tablePath(sfDir, name))
     }
+
+  /** What schema inference reads for one table: reader options, the
+    * parquet-relevant session confs and the table's file listing. */
+  private case class Signature(options: Map[String, String],
+                               confs: Map[String, String],
+                               files: Seq[(String, Long, Long)])
+
+  private val schemas = new ConcurrentHashMap[String, (Signature, StructType)]()
+
+  private def signature(spark: SparkSession, path: String,
+                        options: Map[String, String]): Option[Signature] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConfWithOptions(options))
+      val files = fs.listStatus(p).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+        .sortBy(_._1)
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.contains("parquet") || k == "spark.sql.files.ignoreCorruptFiles"
+      }
+      Some(Signature(options, confs, files))
+    } catch { case NonFatal(_) => None }
+
+  /** `spark.read.parquet(path)` with the session's reader options, given the
+    * memoized schema when the table's signature matches. An unlistable path
+    * takes the plain read, so callers keep Spark's own error. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val options = readOptions(spark)
+    val reader = spark.read.options(options)
+    signature(spark, path, options) match {
+      case None => reader.parquet(path)
+      case Some(sig) =>
+        val schema = Option(schemas.get(path)).collect {
+          case (s, schema) if s == sig => schema
+        }.getOrElse {
+          val inferred = reader.parquet(path).schema
+          schemas.put(path, (sig, inferred))
+          inferred
+        }
+        reader.schema(schema).parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -230,6 +230,14 @@ class ApproxPathsSpec extends SparkSpec {
     } finally { docs.unpersist(); spark.catalog.clearCache(); () }
   }
 
+  test("q126 auto df-cap: exact powers of two land in their own log2 band") {
+    import spark.implicits._
+    val dfs = Seq(1L, 2L, 3L, 7L, 8L, 1023L, 1024L, Long.MaxValue)
+    val bands = dfs.toDF("df").select(TextQueries.dfBand(col("df")))
+      .as[Int].collect().toSeq
+    assert(bands === Seq(0, 1, 1, 2, 3, 9, 10, 62))
+  }
+
   test("q126: a binding cap yields a subset with per-pair J <= exact") {
     val exact = pairsOf(TextQueries.q126PrefixJoin(spark, sfDir))
     spark.catalog.clearCache()

@@ -159,6 +159,51 @@ class OpsEdgeSpec extends SparkSpec {
     assert(rows.last.isNullAt(rows.last.fieldIndex("hi"))) // overflow bin open
   }
 
+  test("q100 NULL-text edge: NULL-key docs drop, as in the groupBy + inner-join form") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import graft.ops.{Dedup, TextAnalysis => TA}
+    val dir = java.nio.file.Files.createTempDirectory("edge_docs100").toString
+    Seq[(Long, String, String, String)](
+      (1L, "the cat sat", "en", "src0"),
+      (2L, "the cat sat", "en", "src0"),
+      (3L, "a dog ran far", "en", "src0"),
+      (4L, null, "en", "src0"),
+      (5L, "a dog ran far away", "de", "src1"))
+      .map { case (id, t, l, s) => (id, t, l, s, Option(t).fold(0L)(_.length.toLong)) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = graft.queries.TextQueries.q100ReportCard(spark, dir).collect().toSet
+    // the groupBy(k) + inner-join formulation q100's window replaced
+    val toks = TA.tokens(col("text"))
+    val n = TA.tokenCount(toks).cast("double")
+    val base = graft.sources.Tables.documents(spark, dir)
+      .select(col("source"), col("lang"), Dedup.normKey(col("text")).as("k"),
+        TA.tokenCount(toks).as("n_tok"),
+        floor((lit(0.3) * (TA.distinctTokenCount(toks).cast("double") / n)
+          + lit(0.3) * (lit(1.0) - TA.stopwordCount(toks, Seq("the", "a")).cast("double") / n)
+          + lit(0.4) * least(lit(1.0), n / lit(100.0))) * lit(1e4))
+          .cast("long").as("q4"))
+    val kc = base.groupBy(col("k")).agg(count(lit(1)).as("kc"))
+    val cells = base.join(kc, Seq("k"))
+      .groupBy(col("source"), col("lang"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
+        sum(col("q4")).as("sq"),
+        sum(when(col("kc") > 1, 1L).otherwise(0L)).as("n_dup_docs"))
+      .withColumn("total_docs", sum(col("n_docs")).over(Window.partitionBy()))
+    val want = cells.select(col("source"), col("lang"), col("n_docs"),
+        col("n_tokens"),
+        (expr("(2 * sq + n_docs) DIV (2 * n_docs)").cast("double") / lit(1e4))
+          .as("mean_quality"),
+        col("n_dup_docs"),
+        (expr("(2 * n_docs * 10000 + total_docs) DIV (2 * total_docs)")
+          .cast("double") / lit(100.0)).as("share_pct"))
+      .collect().toSet
+    assert(got === want)
+    assert(got.map(r => (r.getString(0), r.getLong(2))) ===
+      Set(("src0", 3L), ("src1", 1L)), "the NULL-text doc must not count")
+  }
+
   test("q104 packing edge: one oversized doc straddles shards deterministically") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("edge_docs2").toString
