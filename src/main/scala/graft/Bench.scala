@@ -1,57 +1,22 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // local[N, 2]: allow ONE task retry. Local mode defaults to
-      // maxFailures=1 while every real cluster runs 4 — a single
-      // cold-JVM GCLocker hiccup on the suite's first heavy query then
-      // fails the whole rung record (observed: q04 OOM'd the 1000×
-      // runs=1 record at suite position 4, re-ran clean at 48 s
-      // isolated). One retry is the minimum cluster-faithful setting;
-      // a query whose PLAN over-allocates still fails on the retry.
-      .master(s"local[$cpus, 2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on tmpfs: the sandbox disk sustains ~55 MB/s
-      // and its writeback jitter dominated sub-second queries (measured
-      // ~28 s of task time writing a 20 MB shuffle). A real cluster runs
-      // local SSDs for spark.local.dir; RAM-disk is this box's equivalent.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-tmp"))
-      // Broadcast sizing is a DEPLOYMENT decision, not a query hint: the
-      // r6 sweep removed every broadcast() hint on scale-proportional
-      // tables (part/supplier/customer slices) so plans degrade to
-      // shuffle joins instead of OOM when those tables outgrow memory.
-      // This session's executors hold gigabytes per core, so a few
-      // hundred MB build side is cheap — but ONLY the AQE runtime
-      // threshold is raised: it judges ACTUAL shuffle sizes, while the
-      // static threshold judges Catalyst's estimates, which on derived
-      // frames (aggregates, LSH pair streams) can be off by 100×
-      // (measured: a frame estimated broadcastable built a 10.7 GiB
-      // hash relation at the 1000× rung and hit the 8 GiB hard limit).
-      // Static stays at the default 10 MB; AQE converts to broadcast
-      // when a build side MEASURES under 256 MB — a 170 MB part table
-      // at the 1000× rung converts, a 170 GB one at 100 TB never does.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_MAX", (256L << 20).toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ladder hook: SPARK_GRAFT_CONF="spark.graft.dedup.digestHex=16,
-    // spark.graft.retrieval.queryCap=500" sets session confs before the
-    // run — how the scale ladder measures the conf-gated 100-TB paths
-    // (digest truncation, bounded query set) under bench discipline.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        require(k.startsWith("spark.graft."),
-          s"SPARK_GRAFT_CONF only sets spark.graft.* keys, got $k")
-        spark.conf.set(k, v)
-      })
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.onlyQueries)
+    val anchorsFile = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHORS", "bench_anchors.json"))
+    val anchorsText =
+      if (anchorsFile.isFile)
+        Some(new String(
+          java.nio.file.Files.readAllBytes(anchorsFile.toPath), "UTF-8"))
+      else None
+    // a malformed anchors file fails here, before the run, not after it
+    anchorsText.foreach(Json.mapper.readTree)
+    val spark = GraftSession.start("graft-bench")
     // Per-query shuffle-write volume: wall-clock at sf0.1 is dominated by
     // fixed overheads, but bytes exchanged scale linearly with data — the
     // number that predicts 100x behavior. Collected from task metrics.
@@ -123,14 +88,6 @@ object Bench {
     // a crashing query must NOT look like a fast success: record it as -1
     // and list it under "failed" so the regression is visible in the JSON
     var failed = List.empty[String]
-    // iteration aid: SPARK_GRAFT_ONLY=q20_jaccard_pairs,q44_simhash_neardup
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { s =>
-      val unknown = s.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
     val selected = only.fold(SparkEntry.queries)(s =>
       SparkEntry.queries.filter(kv => s(kv._1)))
     // cumulative-garbage isolation: by mid-run, dozens of queries' worth of
@@ -257,13 +214,6 @@ object Bench {
       System.err.println(f"[bench] $name%-22s $sec%8.2f s  ${cpuSec}%7.1f cpu-s  ${shBytes / 1024}%9d KiB shuffled  $gcDelta%5d ms gc")
       name -> (sec, shBytes, gcDelta, cpuSec)
     }.toMap
-    val anchorsFile = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHORS", "bench_anchors.json"))
-    val anchorsText =
-      if (anchorsFile.isFile)
-        Some(new String(
-          java.nio.file.Files.readAllBytes(anchorsFile.toPath), "UTF-8"))
-      else None
     val (detailLine, summaryLine) =
       renderLines(results, runsPerQuery, failed, only.nonEmpty, sfDir, anchorsText)
     println(detailLine)
@@ -285,7 +235,7 @@ object Bench {
     println(summaryLine)
     System.out.flush()
     spark.stop()
-    if (summaryLine.contains("\"status\":\"fail\"") &&
+    if (Json.mapper.readTree(summaryLine).path("gate").path("status").asText == "fail" &&
         sys.env.get("SPARK_GRAFT_BENCH_GATE").contains("1")) {
       System.err.println(s"[bench] GATE FAILED: $summaryLine")
       sys.exit(2)
@@ -308,18 +258,11 @@ object Bench {
       subsetRun: Boolean,
       sfDir: String,
       anchorsText: Option[String]): (String, String) = {
-    // explicit ROOT locale: the f"" interpolator formats with the JVM
-    // default locale, so a comma-decimal locale would emit unparseable JSON
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, (v, _, _, _)) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val sh = results.map { case (k, (_, b, _, _)) => s"\"" + k + "\":" + b }
-      .mkString("{", ",", "}")
-    val gc = results.map { case (k, (_, _, g, _)) => s"\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    val cpu = results.map { case (k, (_, _, _, c)) => s"\"" + k + "\":" + f3(c) }
-      .mkString("{", ",", "}")
+    import scala.jdk.CollectionConverters._
+    def f3(v: Double): java.math.BigDecimal = Json.dec(v, 3)
+    def numbers(kvs: Iterable[(String, java.math.BigDecimal)]): ObjectNode =
+      kvs.foldLeft(Json.obj()) { case (o, (k, v)) => o.put(k, v) }
+    val rs = results.toSeq // one iteration order for every per-query map
     val total = results.values.map(_._1).filter(_ >= 0).sum
     // the round-1 bench covered q01-q44; the suite has since tripled, so
     // the grand total is not comparable across rounds. Emit the r1-surface
@@ -328,7 +271,7 @@ object Bench {
       case (k, (v, _, _, _)) if v >= 0 &&
         k.drop(1).takeWhile(_.isDigit).toInt <= 44 => v
     }.sum
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.sorted.foldLeft(Json.mapper.createArrayNode())(_.add(_))
     // The driver's harness captures only the LAST ~2000 characters of the
     // build output and parses a JSON line found there. A single line holding
     // four 187-entry name->value maps (~12 KB) gets its head truncated, so
@@ -348,21 +291,19 @@ object Bench {
     // always COMPUTED and reported in the JSON; it only fails the process
     // (exit 2) when SPARK_GRAFT_BENCH_GATE=1, so host-starvation noise
     // can't break the driver's per-round bench capture by default.
-    val gateJson: String = {
-      if (subsetRun || anchorsText.isEmpty)
-        """{"status":"skipped","reason":"subset run or no anchors file"}"""
-      else {
-        val txt = anchorsText.get
-        def num(key: String): Option[Double] =
-          ("\"" + key + "\"\\s*:\\s*([0-9.]+)").r
-            .findFirstMatchIn(txt).map(_.group(1).toDouble)
-        def str(key: String): Option[String] =
-          ("\"" + key + "\"\\s*:\\s*\"([^\"]*)\"").r
-            .findFirstMatchIn(txt).map(_.group(1))
+    val anchors = anchorsText.map(Json.mapper.readTree)
+    def num(key: String): Option[Double] =
+      anchors.map(_.path(key)).filter(_.isNumber).map(_.asDouble)
+    def skipped(reason: String): ObjectNode =
+      Json.obj().put("status", "skipped").put("reason", reason)
+    // (gate record, this run's q01-q44 anchor ratio as the gate printed it)
+    val (gate, runHost) = anchors match {
+      case Some(a) if !subsetRun =>
+        val anchorSf = Option(a.get("sf")).filter(_.isTextual).map(_.asText)
         // anchors are per (host profile, SF): a scale-ladder run at a
         // different SF must not be graded against the sf0.1 anchors
-        if (str("sf").exists(_ != sfDir))
-          s"""{"status":"skipped","reason":"anchors are for ${str("sf").get}, ran $sfDir"}"""
+        if (anchorSf.exists(_ != sfDir))
+          (skipped(s"anchors are for ${anchorSf.get}, ran $sfDir"), None)
         else {
           val maxRatio = num("max_ratio").getOrElse(1.5)
           val aSub = num("total_q01_q44")
@@ -373,14 +314,16 @@ object Bench {
           val rTot =
             if (aN.contains(results.size)) aTot.map(a => total / a) else None
           val worst = (rSub.toSeq ++ rTot.toSeq).maxOption.getOrElse(0.0)
-          val status = if (worst > maxRatio) "fail" else "pass"
-          s"""{"status":"$status","max_ratio":${f3(maxRatio)}""" +
-            aSub.map(a => s""","anchor_q01_q44":${f3(a)}""").getOrElse("") +
-            rSub.map(r => s""","ratio_q01_q44":${f3(r)}""").getOrElse("") +
-            aTot.map(a => s""","anchor_total":${f3(a)}""").getOrElse("") +
-            rTot.map(r => s""","ratio_total":${f3(r)}""").getOrElse("") + "}"
+          val g = Json.obj()
+            .put("status", if (worst > maxRatio) "fail" else "pass")
+            .put("max_ratio", f3(maxRatio))
+          aSub.foreach(a => g.put("anchor_q01_q44", f3(a)))
+          rSub.foreach(r => g.put("ratio_q01_q44", f3(r)))
+          aTot.foreach(a => g.put("anchor_total", f3(a)))
+          rTot.foreach(r => g.put("ratio_total", f3(r)))
+          (g, rSub.map(f3))
         }
-      }
+      case _ => (skipped("subset run or no anchors file"), None)
     }
     // host-adjusted per-query regression report: judge and builder both
     // hand-divided walls by host_factor every round — do it mechanically.
@@ -391,69 +334,67 @@ object Bench {
     // sub-second queries are fixed-overhead noise, the r9 verdict's
     // observed flap band) queries go on the SUMMARY line; the full
     // adjusted map rides the detail line.
-    val (adjJson, regressionsJson) = {
-      val runHost = "\"ratio_q01_q44\"\\s*:\\s*([0-9.]+)".r
-        .findFirstMatchIn(gateJson).map(_.group(1).toDouble)
-      if (anchorsText.isEmpty || runHost.isEmpty) ("{}", "{}")
-      else {
-        val txt = anchorsText.get
-        val anchorHost = "\"queries_host_factor\"\\s*:\\s*([0-9.]+)".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
-        val perQuery = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r
-          .findFirstMatchIn(txt).map(_.group(1)).map { body =>
-            "\"(q[A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }.getOrElse(Map.empty[String, Double])
-        (anchorHost, runHost) match {
-          case (Some(ah), Some(rh)) if perQuery.nonEmpty && rh > 0 =>
-            val adj = results.flatMap { case (k, (v, _, _, _)) =>
-              perQuery.get(k).filter(a => v >= 0 && a > 0)
-                .map(a => k -> (v / a) * (ah / rh))
-            }
-            val adjStr = adj.toSeq.sortBy(_._1)
-              .map { case (k, r) => "\"" + k + "\":" + f3(r) }
-              .mkString("{", ",", "}")
-            // a JSON OBJECT, not an array: "k":v entries inside [...] are
-            // invalid JSON and made the driver's summary-line parse fail
-            // (r10 measurement-bug fix; the flagged set is unchanged)
-            val regs = adj.toSeq
-              .filter { case (k, r) => r >= 1.5 && results(k)._1 >= 1.0 }
-              .sortBy(-_._2)
-              .map { case (k, r) => "\"" + k + "\":" + f3(r) }
-              .mkString("{", ",", "}")
-            (adjStr, regs)
-          case _ => ("{}", "{}")
-        }
+    val perQuery: Map[String, Double] = anchors.map(_.path("queries").properties
+      .asScala.collect { case e if e.getValue.isNumber =>
+        e.getKey -> e.getValue.asDouble }.toMap).getOrElse(Map.empty)
+    val adj: Map[String, Double] =
+      (num("queries_host_factor"), runHost.map(_.doubleValue)) match {
+        case (Some(ah), Some(rh)) if perQuery.nonEmpty && rh > 0 =>
+          results.flatMap { case (k, (v, _, _, _)) =>
+            perQuery.get(k).filter(a => v >= 0 && a > 0)
+              .map(a => k -> (v / a) * (ah / rh))
+          }
+        case _ => Map.empty
       }
-    }
-    val detailLine =
-      s"""{"detail":"per_query","queries":$qs,"cpu_sec":$cpu,"shuffle_write_bytes":$sh,"gc_ms":$gc,"anchor_adj_ratio":$adjJson}"""
+    val adjJson = numbers(adj.toSeq.sortBy(_._1).map { case (k, r) => k -> f3(r) })
+    // a JSON OBJECT, not an array: "k":v entries inside [...] are
+    // invalid JSON and made the summary line unparseable
+    // (r10 measurement-bug fix; the flagged set is unchanged)
+    val regressionsJson = numbers(adj.toSeq
+      .filter { case (k, r) => r >= 1.5 && results(k)._1 >= 1.0 }
+      .sortBy(-_._2)
+      .map { case (k, r) => k -> f3(r) })
+    val detailLine = Json.mapper.writeValueAsString(Json.obj()
+      .put("detail", "per_query")
+      .set[ObjectNode]("queries", numbers(rs.map { case (k, r) => k -> f3(r._1) }))
+      .set[ObjectNode]("cpu_sec", numbers(rs.map { case (k, r) => k -> f3(r._4) }))
+      .set[ObjectNode]("shuffle_write_bytes",
+        numbers(rs.map { case (k, r) => k -> java.math.BigDecimal.valueOf(r._2) }))
+      .set[ObjectNode]("gc_ms",
+        numbers(rs.map { case (k, r) => k -> java.math.BigDecimal.valueOf(r._3) }))
+      .set[ObjectNode]("anchor_adj_ratio", adjJson))
     // 2-decimal, trailing zeros trimmed: array density is what buys the
     // full 187-wall record its place inside the capture window
-    def f2(v: Double): String = {
-      val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      if (s.contains('.'))
-        s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
-      else s
-    }
     val byNum = results.map { case (k, (v, _, _, _)) =>
       k.drop(1).takeWhile(_.isDigit).toInt -> v }
-    val qArr =
-      if (byNum.isEmpty) "[]"
-      else (1 to byNum.keys.max).map(i =>
-        byNum.get(i).map(f2).getOrElse("null")).mkString("[", ",", "]")
-    // host calibration, surfaced mechanically (not as a prose footnote):
-    // the q01-q44 anchor ratio of THIS run — cross-round comparisons in
-    // BASELINE.md divide walls by it so host spread (measured up to 1.35x
-    // between same-day runs of identical code) never reads as regression
-    val hostFactor = "\"ratio_q01_q44\"\\s*:\\s*([0-9.]+)".r
-      .findFirstMatchIn(gateJson).map(m => s""","host_factor":${m.group(1)}""")
-      .getOrElse("")
-    val topQs = results.toSeq.filter(_._2._1 >= 0).sortBy(-_._2._1).take(5)
-      .map { case (k, (v, _, _, _)) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    def summaryWith(queries: String, key: String): String =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"runs_per_query":$runsPerQuery,"total_q01_q44":${f3(r1Total)}$hostFactor,"queries":$queries,"queries_key":"$key","slowest":$topQs,"host_adj_regressions":$regressionsJson,"failed":$failedJson,"gate":$gateJson,"sf":"$sfDir"}"""
+    val qArr = (1 to byNum.keys.maxOption.getOrElse(0))
+      .foldLeft(Json.mapper.createArrayNode()) { (a, i) =>
+        byNum.get(i).fold(a.addNull())(v => a.add(Json.dec(v, 2).stripTrailingZeros))
+      }
+    val topQs = numbers(rs.filter(_._2._1 >= 0).sortBy(-_._2._1).take(5)
+      .map { case (k, (v, _, _, _)) => k -> f3(v) })
+    def summaryWith(queries: JsonNode, key: String): String = {
+      val s = Json.obj()
+        .put("metric", "total")
+        .put("value", f3(total))
+        .put("unit", "sec")
+        .put("n_queries", results.size)
+        .put("runs_per_query", runsPerQuery)
+        .put("total_q01_q44", f3(r1Total))
+      // host calibration, surfaced mechanically (not as a prose footnote):
+      // the q01-q44 anchor ratio of THIS run — cross-round comparisons in
+      // BASELINE.md divide walls by it so host spread (measured up to 1.35x
+      // between same-day runs of identical code) never reads as regression
+      runHost.foreach(h => s.put("host_factor", h))
+      Json.mapper.writeValueAsString(s
+        .set[ObjectNode]("queries", queries)
+        .put("queries_key", key)
+        .set[ObjectNode]("slowest", topQs)
+        .set[ObjectNode]("host_adj_regressions", regressionsJson)
+        .set[ObjectNode]("failed", failedJson)
+        .set[ObjectNode]("gate", gate)
+        .put("sf", sfDir))
+    }
     val fullLine = summaryWith(qArr,
       "queries[i]=wall sec of query number i+1 (qNNN name prefix); -1=failed; full name->sec map on the detail line and bench_summary.json")
     // degrade rather than overflow: a summary whose head the driver's

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke-check of the driver contract: runs SparkEntry.entry (the
   * flagship covid pipeline) and prints its row count + schema. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-smoke")
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows=${df.count()}")
     df.printSchema()

@@ -1,28 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same ladder hook as Bench (local identity checks under rung confs,
-    // e.g. digestHex=16), restricted to spark.graft.* keys
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        require(k.startsWith("spark.graft."),
-          s"SPARK_GRAFT_CONF only sets spark.graft.* keys, got $k")
-        spark.conf.set(k, v)
-      })
+    // local-iteration filter (same env contract as Bench); unset, the run
+    // dumps the full inventory
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.onlyQueries)
+    val spark = GraftSession.start("graft-verify")
     // fail fast on confs whose non-default settings change RESULT VALUES:
     // the oracle SQL is built for the defaults, so running the compare
     // with e.g. sampleDenom=10 produces a guaranteed hash mismatch that
@@ -39,10 +25,6 @@ object Verify {
       }
     }
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (same env contract as Bench); the driver sets
-    // nothing, so its run always dumps the full inventory
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(s =>
       SparkEntry.queries.filter(kv => s(kv._1)))
     selected.foreach { case (name, fn) =>
@@ -60,22 +42,14 @@ object Verify {
           .foreach(_.unpersist(blocking = false))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = only.fold(SparkEntry.oracleSql)(s =>
-        SparkEntry.oracleSql.filter(kv => s(kv._1)))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(
+      only.fold(SparkEntry.oracleSql)(s => SparkEntry.oracleSql.filter(kv => s(kv._1)))))
     spark.stop()
   }
+
+  /** oracle_sql.json: query name -> DuckDB SQL. Library-escaped — a tab or
+    * CR in an oracle query that broke the compare's `json.load` would
+    * silently zero the round's correctness. */
+  def oracleJson(sql: Map[String, String]): String = Json.mapper.writeValueAsString(
+    sql.foldLeft(Json.obj()) { case (o, (k, v)) => o.put(k, v) })
 }

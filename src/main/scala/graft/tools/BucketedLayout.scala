@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.Json
 
 /** Materialize bucketed table layouts — the 100 TB answer to the fact-join
   * exchange (BASELINE.md "q116/q117 laddered": q117's irreducible shuffle
@@ -70,19 +71,15 @@ object BucketedLayout {
     val layouts = args.lift(3).map(_.split(",").toSeq.map { s =>
       val Array(t, k) = s.split(":", 2); (t.trim, k.trim)
     }).getOrElse(DefaultLayouts)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", n.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("graft-bucketed-layout")
     layouts.foreach { case (table, key) =>
       val t0 = System.nanoTime()
       writeLayout(spark, graft.sources.Tables.load(spark, src, table),
         layoutDir(out, table, key), table, key, n)
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"layout":"${table}_by_$key","buckets":$n,"write_sec":$sec%.1f,"src":"$src"}""")
+      println(Json.mapper.writeValueAsString(Json.obj()
+        .put("layout", s"${table}_by_$key").put("buckets", n)
+        .put("write_sec", Json.dec(sec, 1)).put("src", src)))
     }
     spark.stop()
   }

@@ -2,12 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the
   * round's plan-evidence artifact (plans/rNN/<query>_{before,after}.txt).
-  * Session config mirrors Bench so the dumped plans are the plans the
-  * bench actually runs (same shuffle width, same AQE broadcast ceiling).
+  * The session is Bench's ([[graft.GraftSession]]), so the dumped plans
+  * are the plans the bench actually runs.
   * Usage:
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...|all]"
   */
@@ -17,22 +15,10 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r10")
     val suffix = args.lift(2).getOrElse("before")
     val names: Seq[String] = args.lift(3).filterNot(_ == "all")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-tmp"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_MAX", (256L << 20).toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .fold(graft.SparkEntry.queries.keySet)(graft.SparkEntry.onlyQueries)
+      .toSeq.sorted
+    val spark = graft.GraftSession.start("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
       val txt = df.queryExecution.explainString(

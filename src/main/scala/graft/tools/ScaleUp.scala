@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -91,13 +91,7 @@ object ScaleUp {
       val unknown = ts -- graft.sources.Tables.names.toSet
       require(unknown.isEmpty, s"unknown tables: ${unknown.mkString(", ")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("graft-scaleup")
     import spark.implicits._
 
     // The k-row copy table: (copy, prefix). Broadcast side of every cross.

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Json
 import graft.pipeline.VectorLake
 import graft.sources.Tables
 
@@ -25,14 +25,7 @@ object VectorLakeProbe {
       java.nio.file.Files.createTempDirectory("graft_veclake_probe").toString)
     val appendDenom = args.lift(2).flatMap(_.toIntOption).getOrElse(100)
     val nQueries = args.lift(3).flatMap(_.toIntOption).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("graft-veclake-probe")
     val emb = Tables.embeddings(spark, sfDir)
     val isAppend = col("vec_id") % appendDenom === 0
     def timed[T](f: => T): (T, Double) = {
@@ -60,13 +53,13 @@ object VectorLakeProbe {
       val r = VectorLake.topKSq8(spark, queries, path).count()
       (r, spark.read.parquet(s"$path/cells").count())
     }
-    println(s"""{"metric":"veclake","sf":"$sfDir","train_s":${f(trainS)},""" +
-      s""""build_s":${f(buildS)},""" +
-      s""""append_s":${f(appendS)},"topk_s":${f(topkS)},""" +
-      s""""topk_sq8_s":${f(topkSqS)},"cell_rows":$cellRows,""" +
-      s""""sq8_rows":$sqRows,""" +
-      s""""banked_rows":$banked,"topk_rows":$rows,"append_denom":$appendDenom}""")
+    println(Json.mapper.writeValueAsString(Json.obj()
+      .put("metric", "veclake").put("sf", sfDir)
+      .put("train_s", Json.dec(trainS, 3)).put("build_s", Json.dec(buildS, 3))
+      .put("append_s", Json.dec(appendS, 3)).put("topk_s", Json.dec(topkS, 3))
+      .put("topk_sq8_s", Json.dec(topkSqS, 3)).put("cell_rows", cellRows)
+      .put("sq8_rows", sqRows).put("banked_rows", banked)
+      .put("topk_rows", rows).put("append_denom", appendDenom)))
     spark.stop()
   }
-  private def f(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
 }

@@ -76,4 +76,21 @@ class BenchOutputSpec extends AnyFunSuite {
     val s = parse(summary)
     assert(summary.length <= 1900 || s.get("queries").isObject)
   }
+
+  test("both lines are byte-identical to the pre-Jackson renderer's") {
+    // captured from the string-assembly renderLines this codec replaced;
+    // round records and scripts/ladder_report.py parse these exact lines
+    val flagged = Bench.renderLines(
+      Map("q01_agg" -> res(2.0), "q02_filter_project" -> res(0.2)),
+      runsPerQuery = 2, failed = Nil, subsetRun = false,
+      sfDir = sf, anchorsText = Some(anchors))
+    assert(flagged._1 === s"""{"detail":"per_query","queries":{"q01_agg":2.000,"q02_filter_project":0.200},"cpu_sec":{"q01_agg":1.000,"q02_filter_project":0.100},"shuffle_write_bytes":{"q01_agg":1024,"q02_filter_project":1024},"gc_ms":{"q01_agg":5,"q02_filter_project":5},"anchor_adj_ratio":{"q01_agg":4.545,"q02_filter_project":0.455}}""")
+    assert(flagged._2 === s"""{"metric":"total","value":2.200,"unit":"sec","n_queries":2,"runs_per_query":2,"total_q01_q44":2.200,"host_factor":2.200,"queries":[2,0.2],"queries_key":"queries[i]=wall sec of query number i+1 (qNNN name prefix); -1=failed; full name->sec map on the detail line and bench_summary.json","slowest":{"q01_agg":2.000,"q02_filter_project":0.200},"host_adj_regressions":{"q01_agg":4.545},"failed":[],"gate":{"status":"fail","max_ratio":1.500,"anchor_q01_q44":1.000,"ratio_q01_q44":2.200,"anchor_total":2.000,"ratio_total":1.100},"sf":"$sf"}""")
+    val subset = Bench.renderLines(
+      Map("q01_agg" -> res(1.0), "q03_join_broadcast" -> (-1.0, 0L, 0L, 0.0)),
+      runsPerQuery = 1, failed = List("q03_join_broadcast"), subsetRun = true,
+      sfDir = sf, anchorsText = Some(anchors))
+    assert(subset._1 === s"""{"detail":"per_query","queries":{"q01_agg":1.000,"q03_join_broadcast":-1.000},"cpu_sec":{"q01_agg":0.500,"q03_join_broadcast":0.000},"shuffle_write_bytes":{"q01_agg":1024,"q03_join_broadcast":0},"gc_ms":{"q01_agg":5,"q03_join_broadcast":0},"anchor_adj_ratio":{}}""")
+    assert(subset._2 === s"""{"metric":"total","value":1.000,"unit":"sec","n_queries":2,"runs_per_query":1,"total_q01_q44":1.000,"queries":[1,null,-1],"queries_key":"queries[i]=wall sec of query number i+1 (qNNN name prefix); -1=failed; full name->sec map on the detail line and bench_summary.json","slowest":{"q01_agg":1.000},"host_adj_regressions":{},"failed":["q03_join_broadcast"],"gate":{"status":"skipped","reason":"subset run or no anchors file"},"sf":"$sf"}""")
+  }
 }

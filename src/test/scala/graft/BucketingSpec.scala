@@ -62,6 +62,8 @@ class BucketingSpec extends SparkSpec {
       .q117PartSupplierDiversity(spark, sfDir).collect().toSet
     val plain04 = graft.queries.CoreQueries
       .q04JoinLarge(spark, sfDir).collect().toSet
+    val aqeCeiling = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val prevCeiling = spark.conf.getOption(aqeCeiling)
     try {
       Seq("lineitem" -> "l_partkey", "part" -> "p_partkey",
           "lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
@@ -74,7 +76,7 @@ class BucketingSpec extends SparkSpec {
       // broadcast; the blacklist anti DOES broadcast there — covered by
       // the separate layout-property assertion below)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set(aqeCeiling, "-1")
 
       // --- q117 on lineitem_by_partkey + part_by_partkey ---
       spark.conf.set("spark.graft.bucketed.lineitem",
@@ -131,9 +133,10 @@ class BucketingSpec extends SparkSpec {
     } finally {
       Seq("spark.graft.bucketed.lineitem", "spark.graft.bucketed.part",
         "spark.graft.bucketed.orders",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+        "spark.sql.autoBroadcastJoinThreshold")
         .foreach(spark.conf.unset)
+      // the session's own ceiling, not the default, for the suites after this
+      prevCeiling.fold(spark.conf.unset(aqeCeiling))(spark.conf.set(aqeCeiling, _))
       spark.catalog.listTables().collect()
         .filter(_.name.startsWith("graft_bucketed_"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))

@@ -17,7 +17,8 @@ class SkewJoinSpec extends SparkSpec {
   test("AQE splits a skewed join partition (skew=true in the final plan)") {
     import spark.implicits._
     val confs = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ, static
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1", // and in AQE
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",

@@ -4,16 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all specs (one JVM-wide session; Spark
-  * reuses it across suites via getOrCreate). */
+/** Shared local SparkSession for all specs: the entry points' own
+  * settings ([[GraftSession]]) at 4 cores, one JVM-wide session that Spark
+  * reuses across suites via getOrCreate. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.start("graft-test", cores = 4)
 
   /** Smallest fixture dir — tests should be fast; correctness vs DuckDB is
     * the driver's job at sf0.01. */
