@@ -19,7 +19,8 @@ object Dedup {
 
   /** Normalization for exact dedup: lowercase + length-capped prefix.
     * (Cap keeps the groupBy key bounded; at scale use the full text's md5
-    * computed the same way.) */
+    * computed the same way.) The text is Unicode, so this is Spark's
+    * Unicode `lower`, not an ASCII `translate`. */
   def normKey(text: Column, prefixLen: Int = 120): Column =
     md5(lower(text.substr(lit(1), lit(prefixLen))))
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Star-schema load: surrogate keying + fact projection + FK integrity
@@ -28,15 +29,42 @@ object Mart {
           col("region_key"), col("region_name"), col("country_name"))),
         Seq("region_name", "country_name"), "left")
 
+  /** The 10 measures + lat/long, in fact-column order. */
+  private val measures = Seq(
+    "active", "deaths", "confirmed", "recovered",
+    "active_diff", "deaths_diff", "confirmed_diff", "recovered_diff",
+    "fatality_rate", "lat", "long").map(col)
+
   /** Fact projection: 10 measures + 2 FK keys
     * (reference `pg_init_covid19.sql:168-188`). */
   def factCovid(keyed: DataFrame): DataFrame =
-    keyed.select(
-      col("active"), col("deaths"), col("confirmed"), col("recovered"),
-      col("active_diff"), col("deaths_diff"), col("confirmed_diff"),
-      col("recovered_diff"), col("fatality_rate"),
-      col("lat"), col("long"),
-      col("date_key"), col("region_key").cast("int").as("region_key"))
+    keyed.select(measures ++ Seq(
+      col("date_key"), col("region_key").cast("int").as("region_key")): _*)
+
+  /** The fact of one batch of flattened rows keyed WITHOUT a join, for the
+    * dim [[Dims.regionDim]] derives from the same rows: `region_key` is
+    * `dense_rank()` over (country_name, region_name), which numbers the
+    * distinct natural keys in the order the dim's `row_number()` does, so
+    * it is exactly the key the dim assigns. A row with a NULL natural-key
+    * part gets a NULL key, as [[withSurrogateKeys]]' left join cannot match
+    * it. Equal as a multiset to
+    * `factCovid(withSurrogateKeys(flat, Dims.regionDim(flat)))`, without
+    * the dim's aggregate, the broadcast or the join; one `select`, so the
+    * analyzer runs once.
+    *
+    * The window has no partition: the batch is ranked in one task, which
+    * is the dim's own single-partition window (a date is hundreds of
+    * rows). For keys against a dim built elsewhere (seeded, upserted),
+    * use [[withSurrogateKeys]]. */
+  def rankKeyedFact(flat: DataFrame): DataFrame = {
+    val country = col("country_name")
+    val region = col("region_name")
+    val regionKey = when(country.isNotNull && region.isNotNull,
+      dense_rank().over(Window.orderBy(country, region)))
+    flat.select(measures ++ Seq(
+      Dims.dateKey(col("day_of_data")).as("date_key"),
+      regionKey.cast("int").as("region_key")): _*)
+  }
 
   /** J3: FK integrity as a post-write check — Spark has no FK constraints
     * (`pg_init_covid19.sql:78-79`), so orphan keys are detected with a

@@ -128,11 +128,13 @@ object Multimodal {
       .toDF()
 
   /** Byte-level blob features — pure Catalyst expressions (codegen'd, no
-    * UDF): size, content hash, and an 8-byte prefix signature. */
+    * UDF): size, content hash, and an 8-byte prefix signature. The
+    * signature is lower-case hex; `hex` emits only `0-9A-F`, so its case
+    * map is a `translate` of those six letters, not a Unicode `lower`. */
   def byteSize(blob: Column): Column = octet_length(blob)
   def contentHash(blob: Column): Column = sha2(blob, 256)
   def prefixSig(blob: Column, n: Int = 8): Column =
-    lower(hex(substring(blob, 1, n)))
+    translate(hex(substring(blob, 1, n)), "ABCDEF", "abcdef")
 
   /** Frame sampling: every `stride`-th frame index in [0, n_frames) from
     * metadata only — `sequence` + `explode`, no blob bytes touched. The

@@ -29,9 +29,20 @@ import org.apache.spark.sql.functions._
   */
 object Urls {
 
+  private val AsciiLower = "abcdefghijklmnopqrstuvwxyz"
+  private val AsciiUpper = AsciiLower.toUpperCase
+
+  /** ASCII case maps as `translate`: byte-for-byte `upper`/`lower` on ASCII
+    * input, without Spark's Unicode case mapping, whose first use in a JVM
+    * builds an ICU case table over all 1,114,112 code points. */
+  private[graft] def asciiUpper(c: Column): Column = translate(c, AsciiLower, AsciiUpper)
+  private[graft] def asciiLower(c: Column): Column = translate(c, AsciiUpper, AsciiLower)
+
   /** Deterministic messy raw URL for a doc row: three variants cycling on
     * `doc_id % 3`, all canonicalizing to
-    * `http://<source>.example.com/articles/<doc_id DIV 3>?id=<g>`. */
+    * `http://<source>.example.com/articles/<doc_id DIV 3>?id=<g>`.
+    * Precondition: `source` is ASCII (a DNS label); its upper-cased
+    * variant maps ASCII letters only. */
   def syntheticRawUrl(docId: Column, source: Column): Column = {
     val g = (docId / 3).cast("long") // non-negative ids: DIV == floor
     val host = concat(source, lit(".example.com"))
@@ -40,14 +51,16 @@ object Urls {
       concat(lit("http://www."), host, path,
         lit("?id="), g, lit("&utm_source=feed#sec"), docId % 5))
       .when(docId % 3 === 1,
-        concat(lit("HTTP://"), upper(host), lit(":80"), path,
+        concat(lit("HTTP://"), asciiUpper(host), lit(":80"), path,
           lit("/?utm_campaign=x&id="), g))
       .otherwise(concat(lit("http://"), host, path, lit("?id="), g))
   }
 
   /** Canonical form of an http URL (see object doc for the rule set).
     * Assumes an `http://`-schemed input (what [[syntheticRawUrl]] emits;
-    * a production build would case on the scheme first). */
+    * a production build would case on the scheme first) with an ASCII
+    * host: the host is lower-cased over ASCII letters only, as RFC 3986
+    * §6.2.2.1 normalizes it (an IDN host arrives as punycode). */
   def canonicalUrl(raw: Column): Column = {
     // fragment off first (a '?' inside a fragment must not revive a query)
     val noFrag = split_part(raw, lit("#"), lit(1))
@@ -59,7 +72,7 @@ object Urls {
     val rest = substring(base, 8, Int.MaxValue) // past "http://"
     val host0 = split_part(rest, lit("/"), lit(1))
     val host = regexp_replace(
-      regexp_replace(lower(host0), "^www\\.", ""), ":80$", "")
+      regexp_replace(asciiLower(host0), "^www\\.", ""), ":80$", "")
     val path0 = substring(rest, length(host0) + 1, lit(Int.MaxValue))
     // trailing-slash strip (regexp form: the 2-arg rtrim overload is
     // deprecated at resolution time and WARN-logs on every plan)

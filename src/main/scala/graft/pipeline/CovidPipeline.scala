@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import graft.ops.{CovidOps, Dims, Mart}
 import graft.quality.Quality
+import graft.sources.Sinks
 import graft.schemas.CovidSchemas
 
 /** End-to-end covid pipeline (SURVEY.md §3.2 unified with §3.1):
@@ -14,18 +15,27 @@ import graft.schemas.CovidSchemas
   * `SURVEY.md §3.1 note`), this pipeline does flatten AND dimensional load.
   *
   * Each date is extracted ONCE, as the reference lands each report once in
-  * its `covid19_json` staging table: the flattened rows are persisted and
-  * materialized by a single action, which makes exactly one fetch per
-  * (date, country) and fills an Observation of the row count. The gate
-  * reads its count from that Observation (no job of its own) BEFORE the
-  * mart is built, and the mart is built from the same landed snapshot the
-  * gate passed — with a live API, never from a second fetch.
+  * its `covid19_json` staging table, and the mart is built from the same
+  * snapshot the gate passed — with a live API, never from a second fetch.
   *
-  * Downstream of the gate the landed frame is read as ONE partition: a
-  * passed gate bounds the date to `expectedRows * (1 + tolerance)` rows
-  * (245 at the reference's 240 ± 2 %), so this is not a tuning knob. Over a
-  * single-partition child the region aggregate and its window plan no
-  * Exchange, and the fact write is one task and one file per date.
+  * [[runRange]] loads a date with ONE write, gated from its own Observation
+  * and published by rename: the fact is keyed straight from the flattened
+  * rows ([[graft.ops.Mart.rankKeyedFact]]) and written into a hidden
+  * staging directory under the lake ([[graft.sources.Sinks.replaceDatePartition]]).
+  * That write makes exactly one fetch per (date, country) and fills an
+  * Observation of the flattened row count; the gate reads it, and only a
+  * date that passes is renamed into the lake. A failing date leaves the
+  * lake untouched. Since the gate follows the write, an oversized bad
+  * extract is ranked in one task and staged before the gate rejects it; it
+  * never reaches the lake.
+  *
+  * [[run]] returns one date's mart lazily, its region dim and the fact
+  * keyed against that dim by the broadcast join: the flattened rows are
+  * persisted and materialized by a single observed `noop` write, the gate
+  * reads that Observation BEFORE the mart is built, and downstream of the
+  * gate the landed frame is read as ONE partition — a passed gate bounds
+  * the date to `expectedRows * (1 + tolerance)` rows (245 at the
+  * reference's 240 ± 2 %), so this is not a tuning knob.
   */
 object CovidPipeline {
 
@@ -38,6 +48,15 @@ object CovidPipeline {
     def release(): Unit = flat.unpersist(blocking = true)
   }
 
+  /** One date's flattened rows and the Observation of their count that the
+    * first action over them fills. A name per call: one query over two
+    * runs' frames (two dates, or one date from two sources) must not see
+    * two definitions of one metric, and a run must not match a still-cached
+    * landing of an earlier run. */
+  private def observedFlat(stage: DataFrame, ds: String): (DataFrame, Observation) =
+    Quality.withObservedStats(
+      CovidOps.flatten(stage, ds), Nil, s"covid_gate_${java.util.UUID.randomUUID}")
+
   /** Run the pipeline for one logical date over a stage table: land and
     * gate eagerly, return the lazy mart over the landed rows. On a failed
     * gate the landed rows are released before the error propagates; on
@@ -48,11 +67,7 @@ object CovidPipeline {
     */
   def run(spark: SparkSession, stage: DataFrame, ds: String,
           expectedRows: Long = 240, tolerance: Double = 0.02): Result = {
-    // a name per run: one query over two runs' frames (two dates, or one
-    // date from two sources) must not see two definitions of one metric,
-    // and a run must not match a still-cached landing of an earlier run
-    val (observed, obs) = Quality.withObservedStats(
-      CovidOps.flatten(stage, ds), Nil, s"covid_gate_${java.util.UUID.randomUUID}")
+    val (observed, obs) = observedFlat(stage, ds)
     val landed = observed.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       landed.write.format("noop").mode("overwrite").save()
@@ -62,21 +77,21 @@ object CovidPipeline {
     }
     val one = landed.coalesce(1)
     val regions = Dims.regionDim(one)
-    val fact = Mart.factCovid(Mart.withSurrogateKeys(one, regions))
-    Result(landed, regions, fact)
+    Result(landed, regions, Mart.factCovid(Mart.withSurrogateKeys(one, regions)))
   }
 
   /** Multi-date backfill — the Airflow `catchup=True` twin (reference
-    * `dags/ETL_covid19_spark.py:77`): one pipeline run per date in
-    * [ds0, ds1], each landing its fact rows as an IDEMPOTENT per-date
-    * partition overwrite ([[graft.sources.Sinks.overwriteDatePartition]] —
-    * the reference's DELETE-then-reinsert semantic,
-    * `pg_init_covid19.sql:113`). Re-running any sub-range replaces exactly
-    * those partitions; other days' files are never touched. The date loop
-    * is orchestration (Airflow's scheduler role) — the per-date WORK is
-    * fully distributed, so driver-side iteration is correct at any scale.
-    * Each date makes one fetch per (date, country) and writes one file, and
-    * its landed rows are released when its write returns or throws.
+    * `dags/ETL_covid19_spark.py:77`): one write per date in [ds0, ds1],
+    * gated from its own Observation and published by rename as an
+    * IDEMPOTENT replace of that date's partition
+    * ([[graft.sources.Sinks.replaceDatePartition]] — the reference's
+    * DELETE-then-reinsert semantic, `pg_init_covid19.sql:113`). Re-running
+    * any sub-range replaces exactly those partitions; other days' files
+    * are never touched, and a date whose gate fails keeps its old files.
+    * The date loop is orchestration (Airflow's scheduler role) — the
+    * per-date WORK is fully distributed, so driver-side iteration is
+    * correct at any scale. Each date makes one fetch per (date, country),
+    * runs one SQL execution and writes one file; nothing is persisted.
     *
     * @param stageFor  per-date stage source (default: the deterministic
     *                  fixture; production: the DSv2 connector for that ds)
@@ -90,7 +105,6 @@ object CovidPipeline {
                expectedRows: Long = 240, tolerance: Double = 0.02,
                onFailure: (String, Throwable) => Unit = (_, _) => ()): Seq[String] = {
     import java.time.LocalDate
-    import org.apache.spark.sql.functions.lit
     val d0 = LocalDate.parse(ds0)
     val d1 = LocalDate.parse(ds1)
     require(!d1.isBefore(d0), s"empty backfill range [$ds0, $ds1]")
@@ -99,10 +113,11 @@ object CovidPipeline {
     Iterator.iterate(d0)(_.plusDays(1)).takeWhile(!_.isAfter(d1))
       .map(_.toString).map { ds =>
         try {
-          val r = run(spark, stage0(ds), ds, expectedRows, tolerance)
-          try graft.sources.Sinks.overwriteDatePartition(
-            r.fact.withColumn("day_of_data", lit(ds).cast("date")), lakePath)
-          finally r.release()
+          val (observed, obs) = observedFlat(stage0(ds), ds)
+          // the gate runs only after the write returned, so it never waits
+          // on an Observation a failed write left empty
+          Sinks.replaceDatePartition(Mart.rankKeyedFact(observed), lakePath, ds)(
+            Quality.observedCountGate(obs, expectedRows, tolerance))
           ds
         } catch {
           case e: Throwable => onFailure(ds, e); throw e

@@ -2451,11 +2451,12 @@ object TextQueries {
     * whole screen is a narrow pipeline over the train scan — here the
     * slice is proportional (a fixture artifact, same posture as q83's
     * embedding decontam) so the equi-join is left to size itself. */
-  /** CACHE CONTRACT: the skinny cross-slice candidate-pair spine and the
-    * verified-pair frame persist until clearCache (Bench/Verify clear per
-    * query) — pairs drives the verify's two digest-side key sets + join
-    * spine, and the verified frame feeds both the per-doc rollup and the
-    * argmax-eval join. Three/two longs per row respectively. */
+  /** CACHE CONTRACT: the skinny cross-slice candidate-pair spine persists
+    * until clearCache (Bench/Verify clear per query) — pairs drives the
+    * verify's two digest-side key sets + join spine. Two longs per row.
+    * The verified pairs are read once: one aggregate per train doc yields
+    * the hit count and, as `max(struct(jacc, -doc2))`, the max Jaccard with
+    * its eval doc — the smallest `doc2` at the maximum. */
   def q189FuzzyDecontam(spark: SparkSession, dir: String): DataFrame = {
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docs = shingled(spark, dir)
@@ -2467,22 +2468,16 @@ object TextQueries {
         Seq("band", "band_key"))
       .select("doc1", "doc2").distinct()
       .persist(mad)
-    val v = pairOverlapCounts(docs, pairs)
+    pairOverlapCounts(docs, pairs)
       .select(col("doc1"), col("doc2"),
         round(col("inter").cast("double")
           / (col("n1") + col("n2") - col("inter")).cast("double"), 4).as("jacc"))
       .filter(col("jacc") >= 0.3)
-      .persist(mad)
-    val g = v.groupBy(col("doc1"))
-      .agg(count(lit(1)).as("n_eval_hits"), max(col("jacc")).as("max_jacc"))
-    // argmax eval doc: equality on the ROUNDED jacc both sides computed
-    // identically, so the comparison is exact; min doc2 breaks ties
-    val top = v.join(g, Seq("doc1"))
-      .filter(col("jacc") === col("max_jacc"))
-      .groupBy(col("doc1")).agg(min(col("doc2")).as("top_eval_id"))
-    g.join(top, Seq("doc1"))
+      .groupBy(col("doc1"))
+      .agg(count(lit(1)).as("n_eval_hits"),
+        max(struct(col("jacc"), (-col("doc2")).as("neg_doc2"))).as("top"))
       .select(col("doc1").as("train_id"), col("n_eval_hits"),
-        col("max_jacc"), col("top_eval_id"))
+        col("top.jacc").as("max_jacc"), (-col("top.neg_doc2")).as("top_eval_id"))
   }
 
   /** q190: per-source shared-prefix boilerplate detection — the header/

@@ -30,17 +30,54 @@ object Sinks {
   /** Idempotent per-date re-run: replaces ONLY the partitions present in
     * `df` (dynamic partition overwrite), the correct re-run semantic the
     * reference approximates with `DELETE ... WHERE day_of_data = ds` +
-    * re-insert (`pg_init_covid19.sql:113`). */
+    * re-insert (`pg_init_covid19.sql:113`). The mode is a writer option,
+    * so the session's `spark.sql.sources.partitionOverwriteMode` is neither
+    * read nor changed: a concurrent writer on the session keeps its mode. */
   def overwriteDatePartition(df: DataFrame, path: String,
-                             dateCol: String = "day_of_data"): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(dateCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+                             dateCol: String = "day_of_data"): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(dateCol)
+      .parquet(path)
+
+  /** Staged single-date replace: the rows of partition `dateCol=ds`, given
+    * WITHOUT the `dateCol` column, replace that partition only if
+    * `beforePublish` returns normally.
+    *
+    *  1. `df` is written to `<path>/.staging-<uuid>/<dateCol>=<ds>`; Spark
+    *     readers of `path` skip entries starting with `.`, so the staged
+    *     files are invisible to them.
+    *  2. `beforePublish` runs (e.g. a gate over the write's Observation).
+    *  3. Publish, the commit step of Spark's own dynamic overwrite: delete
+    *     the final partition directory, `mkdirs` its parent, rename the
+    *     staged directory in.
+    *
+    * The staging root is deleted in every case. If the write or
+    * `beforePublish` throws, the lake is untouched, the old partition
+    * included. One write with no second read of `df`: what `df` computes
+    * (and observes) happens once. */
+  def replaceDatePartition(df: DataFrame, path: String, ds: String,
+                           dateCol: String = "day_of_data")
+                          (beforePublish: => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    require(!df.columns.contains(dateCol),
+      s"replaceDatePartition takes the partition's rows without `$dateCol`")
+    val root = new Path(path)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID}")
+    val staged = new Path(staging, s"$dateCol=$ds")
+    val target = new Path(root, s"$dateCol=$ds")
+    try {
+      df.write
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(staged.toString)
+      beforePublish
+      if (fs.exists(target) && !fs.delete(target, true))
+        throw new java.io.IOException(s"failed to delete $target")
+      fs.mkdirs(root)
+      if (!fs.rename(staged, target))
+        throw new java.io.IOException(s"failed to rename $staged to $target")
+    } finally fs.delete(staging, true)
   }
 
   /** Layout-aware append: rows sorted by `clusterBy` WITHIN each written

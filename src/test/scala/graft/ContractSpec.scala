@@ -31,7 +31,7 @@ class ContractSpec extends SparkSpec {
     "q180_pca_power",       // centered array frame scanned twice per power round
     "q181_hybrid_rrf",      // embeds q179's persisted (doc, gram, tf) frame in its lexical arm
     "q183_dsir_weights",    // (doc, bucket) count frame feeds model + scoring aggs
-    "q189_fuzzy_decontam",  // candidate + verified-pair spines drive multiple subplans
+    "q189_fuzzy_decontam",  // candidate-pair spine drives 3 verify subplans
     "q197_jacc_calibration", // candidate-pair spine drives 3 verify subplans (q20's contract)
     "q204_source_gram_overlap", // ≤|sources|²-row matrix feeds diagonal sizes + off-diagonal output
     "q206_vocab_coverage",  // Heaps-bounded (source, token) counts feed vocab cut + coverage rollup

@@ -1,10 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.shim
 import graft.ops.{CovidOps, Dims, Mart}
-import graft.pipeline.CovidPipeline
+import graft.pipeline.{CovidFixture, CovidPipeline}
 import graft.quality.Quality
 import graft.sources.{CovidPayloadProvider, FixturePayloadProvider}
 
@@ -25,7 +28,8 @@ object CountingPayloadProvider {
 }
 
 /** Each date is extracted once, gated from that one extract, loaded as one
-  * file, and leaves no landed block behind. */
+  * file by one write, published only past the gate, and leaves no landed
+  * block behind. */
 class CovidLandingSpec extends SparkSpec {
 
   private def counted(ds: String): DataFrame =
@@ -87,5 +91,67 @@ class CovidLandingSpec extends SparkSpec {
     val parts = new java.io.File(s"$lake/day_of_data=$ds").listFiles()
       .filter(_.getName.startsWith("part-"))
     assert(parts.length === 1)
+  }
+
+  /** (jobs, SQL executions) that `body` runs, counted with the bus drained
+    * on both sides. */
+  private def jobsAndExecutions(body: => Unit): (Int, Int) = {
+    val jobs, executions = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    shim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; shim.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, executions.get)
+  }
+
+  test("a connector date is one SQL execution of 2 jobs: the extract stage and the keyed write") {
+    val lake = freshLake("graft_jobs")
+    CovidPipeline.runRange(spark, "2023-03-01", "2023-03-01", lake, counted)
+    CountingPayloadProvider.calls.set(0)
+    val counts = jobsAndExecutions {
+      CovidPipeline.runRange(spark, "2023-03-02", "2023-03-02", lake, counted)
+    }
+    assert(counts === ((2, 1)))
+    assert(CountingPayloadProvider.calls.get === 5)
+  }
+
+  test("a re-run whose gate fails publishes nothing: same files, same bytes, no staging left") {
+    val ds = "2023-03-02"
+    val lake = freshLake("graft_gate_rerun")
+    CovidPipeline.runRange(spark, ds, ds, lake, counted)
+    val before = partitionBytes(lake, ds)
+    var notified = List.empty[String]
+    intercept[Quality.QualityCheckFailure] {
+      CovidPipeline.runRange(spark, ds, ds, lake, counted, expectedRows = 9999,
+        onFailure = (d, _) => notified ::= d)
+    }
+    assert(notified === List(ds))
+    assert(partitionBytes(lake, ds) === before)
+    assert(stagingEntries(lake).isEmpty)
+  }
+
+  test("the rank-keyed fact equals the dim-joined fact, NULL natural-key parts included") {
+    import org.apache.spark.sql.types.StringType
+    val f = CovidOps.flatten(CovidFixture.stage(spark, "2023-03-02"), "2023-03-02")
+    val withNulls = f
+      .unionByName(f.filter(col("region_name") === "China_Prov_0")
+        .withColumn("country_name", lit(null).cast(StringType)))
+      .unionByName(f.filter(col("region_name") === "Russia_Prov_1")
+        .withColumn("region_name", lit(null).cast(StringType)))
+    for ((flat, nullKeys) <- Seq(f -> 0L, withNulls -> 2L)) {
+      val expected = Mart.factCovid(Mart.withSurrogateKeys(flat, Dims.regionDim(flat)))
+      val got = Mart.rankKeyedFact(flat)
+      assert(got.schema === expected.schema)
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+      assert(got.filter(col("region_key").isNull).count() === nullKeys)
+      assert(expected.filter(col("region_key").isNull).count() === nullKeys)
+    }
   }
 }

@@ -299,4 +299,60 @@ class SinksSpec extends SparkSpec {
     assert(plan.contains("ReadSchema: struct<id:bigint,v:double>"),
       s"orc scan did not prune columns:\n$plan")
   }
+
+  test("overwriteDatePartition replaces only its partition under a STATIC session mode and leaves the mode as it was") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "STATIC")
+    try {
+      val dir = Files.createTempDirectory("graft_overwrite_mode").resolve("lake").toString
+      Seq((1L, "2024-06-01"), (2L, "2024-06-02")).toDF("id", "day_of_data")
+        .write.partitionBy("day_of_data").parquet(dir)
+      Sinks.overwriteDatePartition(Seq((3L, "2024-06-02")).toDF("id", "day_of_data"), dir)
+      val rows = spark.read.parquet(dir)
+        .select(col("id"), col("day_of_data").cast("string")).as[(Long, String)]
+        .collect().toSet
+      assert(rows === Set((1L, "2024-06-01"), (3L, "2024-06-02")))
+      assert(spark.conf.get(key) === "STATIC")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("replaceDatePartition publishes one partition by rename; other partitions keep their files") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_replace").resolve("lake").toString
+    Seq((1L, "2024-07-01"), (2L, "2024-07-02")).toDF("id", "day_of_data")
+      .write.partitionBy("day_of_data").parquet(dir)
+    val untouched = partitionBytes(dir, "2024-07-01")
+    var gated = false
+    Sinks.replaceDatePartition(Seq(5L, 6L).toDF("id"), dir, "2024-07-02") { gated = true }
+    assert(gated)
+    val rows = spark.read.parquet(dir)
+      .select(col("id"), col("day_of_data").cast("string")).as[(Long, String)]
+      .collect().toSet
+    assert(rows === Set((1L, "2024-07-01"), (5L, "2024-07-02"), (6L, "2024-07-02")))
+    assert(partitionBytes(dir, "2024-07-01") === untouched)
+    assert(partitionBytes(dir, "2024-07-02").keys.forall(n => n.startsWith("part-") || n.startsWith(".part-")))
+    assert(stagingEntries(dir).isEmpty)
+  }
+
+  test("replaceDatePartition: a write that throws keeps the old partition, skips beforePublish and leaves no staging") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_replace_fail").resolve("lake").toString
+    Seq((1L, "2024-07-01")).toDF("id", "day_of_data")
+      .write.partitionBy("day_of_data").parquet(dir)
+    val before = partitionBytes(dir, "2024-07-01")
+    val failing = spark.range(4).select(
+      when(col("id") === 2, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    var gated = false
+    intercept[Exception] {
+      Sinks.replaceDatePartition(failing, dir, "2024-07-01") { gated = true }
+    }
+    assert(!gated)
+    assert(partitionBytes(dir, "2024-07-01") === before)
+    assert(stagingEntries(dir).isEmpty)
+  }
 }

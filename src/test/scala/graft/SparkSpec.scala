@@ -14,6 +14,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * the driver's job at sf0.01. */
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Name -> bytes of every file in one date partition of a lake. */
+  def partitionBytes(lake: String, ds: String): Map[String, Seq[Byte]] =
+    new java.io.File(s"$lake/day_of_data=$ds").listFiles().map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  /** Staging directories a staged partition replace left under a lake. */
+  def stagingEntries(lake: String): Seq[String] =
+    new java.io.File(lake).list().filter(_.startsWith(".staging-")).toSeq
+
   /** All parquet scans of a plan, descending through every adaptive
     * wrapper (AQE root, materialized query stages, reused exchanges) —
     * collectLeaves alone stops at AdaptiveSparkPlanExec and silently

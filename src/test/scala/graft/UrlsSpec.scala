@@ -69,4 +69,28 @@ class UrlsSpec extends SparkSpec {
       assert(r.getAs[String]("host").endsWith(".example.com"))
     }
   }
+
+  test("ASCII case maps agree with upper/lower on every printable ASCII character") {
+    val ascii = (32 to 126).map(_.toChar).mkString
+    val r = spark.range(1).select(lit(ascii).as("s"))
+      .select(Urls.asciiUpper(col("s")) === upper(col("s")),
+        Urls.asciiLower(col("s")) === lower(col("s")))
+      .collect()(0)
+    assert(r.getBoolean(0) && r.getBoolean(1))
+  }
+
+  test("q24/q193/q194 case-map their ASCII domains without Spark's Unicode upper/lower") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+    import graft.queries.{MediaQueries, WebQueries}
+    def caseMaps(df: DataFrame) = df.queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect { case e @ (_: Lower | _: Upper) => e }))
+    // the probe sees a Unicode case map where there is one
+    assert(caseMaps(spark.range(1).select(lower(lit("A")))).nonEmpty)
+    for ((name, df) <- Seq(
+        "q24" -> MediaQueries.q24BinaryMeta(spark, sfDir),
+        "q193" -> WebQueries.q193UrlCanonical(spark, sfDir),
+        "q194" -> WebQueries.q194HostRollup(spark, sfDir)))
+      assert(caseMaps(df).isEmpty, s"$name: ${caseMaps(df)}")
+  }
 }
