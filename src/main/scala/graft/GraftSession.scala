@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession every entry point runs under — Bench, Verify,
   * Smoke, the tools and the test suite — so the plans Verify checks
-  * against the DuckDB oracle are the plans Bench times. */
+  * against the DuckDB oracle are the plans Bench times. Every session it
+  * builds carries [[graft.functions.GraftExtensions]]: graft's SQL
+  * functions resolve and `TopK.perKey` plans without any later
+  * registration. */
 object GraftSession {
 
   /** Task slots: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
@@ -14,6 +17,7 @@ object GraftSession {
   def start(appName: String, cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
+      .withExtensions(new graft.functions.GraftExtensions)
       // local[N, 2]: allow ONE task retry. Local mode defaults to
       // maxFailures=1 while every real cluster runs 4 — a single
       // cold-JVM GCLocker hiccup on the suite's first heavy query then

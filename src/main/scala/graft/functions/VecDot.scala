@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -99,10 +99,9 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration of graft's native functions — both as Column builders (for
-  * the DataFrame API, no session needed) and as SQL functions via
-  * `SparkSessionExtensions` (`spark.sql.extensions=graft.functions.GraftExtensions`)
-  * so `spark.sql("SELECT vec_dot(a, b)")` works too. */
+/** graft's native functions as Column builders (for the DataFrame API, no
+  * session needed), plus `fns`, the SQL names [[GraftExtensions]] injects
+  * so `spark.sql("SELECT vec_dot(a, b)")` resolves in every GraftSession. */
 object GraftFunctions {
 
   /** `vec_dot(a, b)` as a Column. Inputs must be float/double arrays —
@@ -304,22 +303,17 @@ object GraftFunctions {
           case LongType => a
           case _ => Cast(a, LongType)
         }))))
-
-  def register(spark: SparkSession): Unit = fns.foreach { case (id, info, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-  }
 }
 
-/** The library's full extension surface in one line:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * injects the native functions (vec_dot), the TopKPerKey planner strategy,
-  * and the row_number-idiom rewrite rule into every session it builds. */
+/** The library's one extension surface: the native SQL functions (`fns`)
+  * and the [[graft.plans.TopKStrategy]] planner, injected when a session is
+  * built and never changed afterwards. Every `GraftSession` is built with
+  * it; a session built elsewhere adds `.withExtensions(new GraftExtensions)`
+  * to its builder or sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.fns.foreach { case (id, info, builder) =>
-      ext.injectFunction((id, info, builder))
-    }
+    GraftFunctions.fns.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
   }
 }

@@ -1,9 +1,9 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, Expression, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
@@ -21,8 +21,9 @@ import org.apache.spark.sql.graft.shim
   * state per key, and it streams.
   *
   * This is the (c) rung of the custom-operator ladder (SURVEY.md §2.9):
-  * a `LogicalPlan` node + `Strategy` + `SparkPlan`, registered via
-  * `spark.experimental.extraStrategies` (or SparkSessionExtensions).
+  * a `LogicalPlan` node + `Strategy` + `SparkPlan`. `GraftExtensions`
+  * injects the strategy when a session is built, so every GraftSession
+  * plans the node; callers reach it only through [[TopK.perKey]].
   * Catalyst still owns distribution: the exec node declares
   * `ClusteredDistribution(keys)`, so the planner inserts the hash shuffle —
   * we never hand-schedule.
@@ -31,29 +32,25 @@ import org.apache.spark.sql.graft.shim
   * strict total orderings (callers include a tie-break column, same as
   * they must for a deterministic window) — q35 hash-matches the DuckDB
   * window-SQL oracle.
+  *
+  * There is no optimizer rule turning a `row_number() <= k` filter into
+  * this node: Spark already plans that filter with a partial
+  * `WindowGroupLimit` below the exchange, which shuffles at most k rows
+  * per key and partition, while this node shuffles every row.
   */
-/** @param rankAttr when set, the operator also emits the 1-based rank
-  *                  within each key (ascending `order`) under this exact
-  *                  attribute — lets [[TopKRewriteRule]] replace a
-  *                  row_number window while preserving the plan's schema
-  *                  and expression ids. */
 final case class TopKPerKey(k: Int, keys: Seq[Expression],
-                            order: Seq[SortOrder], child: LogicalPlan,
-                            rankAttr: Option[Attribute] = None)
+                            order: Seq[SortOrder], child: LogicalPlan)
     extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ rankAttr
-  override def producedAttributes: AttributeSet = AttributeSet(rankAttr.toSeq)
+  override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKey =
     copy(child = newChild)
 }
 
 final case class TopKPerKeyExec(k: Int, keys: Seq[Expression],
-                                order: Seq[SortOrder], child: SparkPlan,
-                                rankAttr: Option[Attribute] = None)
+                                order: Seq[SortOrder], child: SparkPlan)
     extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output ++ rankAttr
-  override def producedAttributes: AttributeSet = AttributeSet(rankAttr.toSeq)
+  override def output: Seq[Attribute] = child.output
 
   /** Hash-cluster rows by key — Catalyst inserts the exchange. */
   override def requiredChildDistribution: Seq[Distribution] =
@@ -78,17 +75,10 @@ final case class TopKPerKeyExec(k: Int, keys: Seq[Expression],
     val keyExprs = keys
     val sortOrder = order
     val childOutput = child.output
-    val outTypes = output.map(_.dataType).toArray
-    val emitRank = rankAttr.isDefined
     child.execute().mapPartitions ({ iter =>
       val ordering = RowOrdering.create(sortOrder, childOutput)
       val keyProj = org.apache.spark.sql.catalyst.expressions
         .UnsafeProjection.create(keyExprs, childOutput)
-      // Exec output must be UnsafeRow (shuffle serializers and
-      // getByteArrayRdd cast unconditionally) — project the rank-extended
-      // rows instead of emitting raw JoinedRows.
-      lazy val rankProj = org.apache.spark.sql.catalyst.expressions
-        .UnsafeProjection.create(outTypes)
       val in = iter.buffered
       new Iterator[InternalRow] {
         private var out: Iterator[InternalRow] = Iterator.empty
@@ -113,12 +103,7 @@ final case class TopKPerKeyExec(k: Int, keys: Seq[Expression],
               }
             } else same = false
           }
-          val rows = heap.dequeueAll.reverseIterator // ascending sort order
-          out = if (!emitRank) rows
-          else rows.zipWithIndex.map { case (row, i) =>
-            rankProj(new org.apache.spark.sql.catalyst.expressions.JoinedRow(
-              row, InternalRow(i + 1))): InternalRow
-          }
+          out = heap.dequeueAll.reverseIterator // ascending sort order
         }
       }
     }, preservesPartitioning = true)
@@ -130,77 +115,25 @@ final case class TopKPerKeyExec(k: Int, keys: Seq[Expression],
 
 object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKey(k, keys, order, child, rankAttr) =>
-      TopKPerKeyExec(k, keys, order, planLater(child), rankAttr) :: Nil
+    case TopKPerKey(k, keys, order, child) =>
+      TopKPerKeyExec(k, keys, order, planLater(child)) :: Nil
     case _ => Nil
   }
 }
 
-/** Optimizer rewrite — the `Rule[LogicalPlan]` rung: a
-  * `filter(row_number().over(partitionBy(P).orderBy(O)) <= k)` pattern is
-  * THE top-k idiom users actually write; this rule swaps the
-  * full-sort WindowExec plan for the bounded-heap operator, emitting the
-  * rank under the window expression's original attribute so the rest of
-  * the plan (projections, downstream filters on rn) is untouched. */
-object TopKRewriteRule
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions._
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window, WindowGroupLimit}
-
-  private def kOf(cond: Expression, rn: Attribute): Option[Int] = cond match {
-    case LessThanOrEqual(a: Attribute, IntegerLiteral(k)) if a.semanticEquals(rn) => Some(k)
-    case LessThan(a: Attribute, IntegerLiteral(k)) if a.semanticEquals(rn) => Some(k - 1)
-    case EqualTo(a: Attribute, IntegerLiteral(1)) if a.semanticEquals(rn) => Some(1)
-    case GreaterThanOrEqual(IntegerLiteral(k), a: Attribute) if a.semanticEquals(rn) => Some(k)
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond,
-        Window(Seq(alias @ Alias(WindowExpression(_: RowNumber, _), _)),
-               parts, order, child, _)) if parts.nonEmpty =>
-      kOf(cond, alias.toAttribute) match {
-        case Some(k) if k >= 1 =>
-          // Spark's InferWindowGroupLimit may already have inserted a
-          // group-limit below this Window (it bounds shuffle volume but
-          // still sorts); the heap operator subsumes it — unwrap.
-          val input = child match {
-            case WindowGroupLimit(_, _, _, _, grandchild) => grandchild
-            case other => other
-          }
-          TopKPerKey(k, parts, order, input, Some(alias.toAttribute))
-        case _ => f
-      }
-  }
-}
-
 object TopK {
-  /** Install strategy + rewrite rule once per session (idempotent). */
-  def setup(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        TopKStrategy +: spark.experimental.extraStrategies
-  }
-
-  /** Opt-in: also rewrite row_number-filter windows into TopKPerKey. */
-  def setupRewrite(spark: SparkSession): Unit = {
-    setup(spark)
-    if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations =
-        TopKRewriteRule +: spark.experimental.extraOptimizations
-  }
-
-  /** Remove the rewrite (keeps the strategy for explicit perKey calls). */
-  def teardownRewrite(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopKRewriteRule)
-
   /** Top-k rows per key, smallest-first under `order` (pass `.desc`
     * columns for top-by-largest; include a tie-break for determinism). */
   def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column],
              k: Int): DataFrame = {
     val spark = df.sparkSession
-    setup(spark)
+    // A GraftSession already plans TopKPerKey (GraftExtensions). Only a
+    // session built elsewhere, today perfbench's own, lacks the strategy;
+    // this fallback goes when ROADMAP item 2 moves perfbench onto
+    // GraftSession.
+    if (!spark.sessionState.planner.strategies.contains(TopKStrategy))
+      spark.experimental.extraStrategies =
+        TopKStrategy +: spark.experimental.extraStrategies
     val orderExprs = order.map(c => shim.expressionEager(c) match {
       case s: SortOrder => s
       case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)

@@ -227,7 +227,9 @@ object SimilarityQueries {
   }
 
   private val kCentroids = 8
-  private val nProbe = 2
+  /** q29's default `spark.graft.ann.nProbe`, the setting the oracle is
+    * built for (Verify rejects any other). */
+  val nProbe = 2
 
   /** ANN via IVF (inverted-file) cells — the second scale path next to
     * SRP-LSH. The coarse quantizer is TRAINED: q142's `kmeansRounds`

@@ -1787,6 +1787,10 @@ object TextQueries {
           .cast("double") / lit(1e4)).as("dup_share"))
   }
 
+  /** q139's default `spark.graft.audit.sampleDenom`: the full corpus, the
+    * setting the oracle is built for (Verify rejects any other). */
+  val sampleDenom = 1L
+
   /** q139: LSH recall audit — q19's MinHash-LSH candidate set graded
     * against q126's EXACT prefix-join ground truth at the same J ≥ 0.5
     * threshold: recall = |LSH ∩ exact| / |exact|. This is the audit that
@@ -1816,7 +1820,7 @@ object TextQueries {
     // result is evaluated eagerly inside withPersisted so both cache
     // entries are released before this function returns.
     val denom = spark.conf.getOption("spark.graft.audit.sampleDenom")
-      .map(_.toLong).getOrElse(1L)
+      .map(_.toLong).getOrElse(sampleDenom)
     require(denom >= 1, s"spark.graft.audit.sampleDenom must be >= 1: $denom")
     val all = sortedShingleSets(spark, dir)
     val docs = if (denom > 1) all.where(col("doc_id") % denom === 0) else all
@@ -1979,29 +1983,34 @@ object TextQueries {
     * (conf unset there). ApproxPathsSpec pins 16-hex == raw on the
     * fixture for all three queries. */
   private def gramKeyOpt(spark: SparkSession): Option[Column => Column] =
-    spark.conf.getOption("spark.graft.dedup.digestHex").map { n =>
-      val hexn = n.toInt
-      require(hexn >= 8 && hexn <= 32 && hexn % 2 == 0,
-        s"spark.graft.dedup.digestHex must be even and in [8, 32], got $n")
+    digestHexOpt(spark).map { hexn =>
       // binary form for the same reason as winDigest: the digest is an
       // internal key, unhex is a bijection, half the key bytes
       (g: Column) => unhex(substring(md5(g), 1, hexn))
     }
 
+  /** `spark.graft.dedup.digestHex`, the md5 digest width in hex chars,
+    * shared by [[gramKeyOpt]] and [[winDigest]]. Contract: unset, or an
+    * EVEN integer in [8, 32]. Both paths key on `unhex` of the truncated
+    * digest, which cuts in whole bytes, so an odd width fails the query
+    * loudly rather than being rounded to a width the caller did not ask
+    * for. */
+  private def digestHexOpt(spark: SparkSession): Option[Int] =
+    spark.conf.getOption("spark.graft.dedup.digestHex").map { n =>
+      val hexn = n.toInt
+      require(hexn >= 8 && hexn <= 32 && hexn % 2 == 0,
+        s"spark.graft.dedup.digestHex must be even and in [8, 32], got $n")
+      hexn
+    }
+
   private def winDigest(spark: SparkSession, toks: Column, i: Column, w: Int): Column = {
-    val hexn = spark.conf.getOption("spark.graft.dedup.digestHex")
-      .map(_.toInt).getOrElse(32)
-    require(hexn >= 8 && hexn <= 32 && hexn % 2 == 0,
-      s"spark.graft.dedup.digestHex must be even and in [8, 32], got $hexn")
+    val hexn = digestHexOpt(spark).getOrElse(32)
     // BINARY digests (r11, guide §2.3 narrower types): the window key is
     // internal — it feeds the dup aggregate and the match-back join and
     // never reaches any output — and unhex is a bijection on hex strings,
     // so 16-byte binary keys group/join IDENTICALLY to the 32-char hex
     // form while halving every digest exchange's key bytes and comparing
-    // word-at-a-time instead of char-at-a-time. (Even-width contract: a
-    // binary digest truncates in whole bytes; the conf's hex widths were
-    // already documented in steps of hex pairs and every pinned value is
-    // even.)
+    // word-at-a-time instead of char-at-a-time.
     val full = md5(concat_ws(" ", slice(toks, i, lit(w))))
     unhex(if (hexn == 32) full else substring(full, 1, hexn))
   }

@@ -163,6 +163,19 @@ class ApproxPathsSpec extends SparkSpec {
     }
   }
 
+  test("digestHex: an odd width is rejected on the gram path (q57) and the window path (q178) alike") {
+    withConf("spark.graft.dedup.digestHex", "15") {
+      val gram = intercept[IllegalArgumentException] {
+        TextQueries.q57GramPostings(spark, sfDir)
+      }
+      val window = intercept[IllegalArgumentException] {
+        TextQueries.q178DupSpans(spark, sfDir)
+      }
+      assert(gram.getMessage.contains("must be even and in [8, 32], got 15"))
+      assert(window.getMessage === gram.getMessage)
+    }
+  }
+
   // ---- q179/q181 bounded query set ------------------------------------
 
   test("q179/q181: queryCap >= |queries| reproduces the exact output; a binding cap is a pure workload restriction") {

@@ -78,7 +78,6 @@ class ArgMinSqDistSpec extends SparkSpec {
   }
 
   test("registers as a SQL function") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val out = spark.sql(
       """SELECT arg_min_sqdist(array(3L, 3L),

@@ -29,4 +29,41 @@ class GraftSessionSpec extends SparkSpec {
       (256L << 20).toString)
     assert(conf.get("spark.ui.enabled") === "false")
   }
+
+  private def simplePlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+
+  test("graft's SQL functions resolve in a fresh session of the context") {
+    val r = spark.newSession().sql(
+      "SELECT vec_dot(array(1F, 2F), array(3F, 4F)) AS d, " +
+        "sq8_dot(sq8_pack(array(1L, 2L)), sq8_pack(array(3L, 4L))) AS q, " +
+        "zorder_code(1, 2) AS z").collect().head
+    assert(r.getDouble(0) === 11.0)
+    assert(r.getLong(1) === 11L)
+    assert(r.getLong(2) === 9L) // 1 -> bit 0, 2 -> bit 1 of dim 1 -> bit 3
+  }
+
+  test("TopK.perKey plans TopKPerKey without touching extraStrategies") {
+    import org.apache.spark.sql.functions.col
+    val df = graft.plans.TopK.perKey(graft.sources.Tables.orders(spark, sfDir),
+      Seq(col("o_custkey")), Seq(col("o_totalprice").desc), 2)
+    df.collect()
+    val p = simplePlan(df)
+    assert(p.contains("TopKPerKey"), p.take(600))
+    assert(!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+  }
+
+  test("a row_number() <= k filter keeps Spark's WindowGroupLimit, not TopKPerKey") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val w = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
+    val df = graft.sources.Tables.orders(spark, sfDir)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    df.collect()
+    val p = simplePlan(df)
+    assert(p.contains("WindowGroupLimit"), p.take(900))
+    assert(!p.contains("TopKPerKey"), p.take(900))
+  }
 }

@@ -64,7 +64,6 @@ class HashedTokenCountsSpec extends SparkSpec {
       .select(GraftFunctions.hashedTokenCounts(col("toks"), 4).as("c"))
       .collect().head
     assert(nullIn.isNullAt(0))
-    GraftFunctions.register(spark)
     // null ELEMENTS count nothing, and the SQL surface matches the Column API
     val viaSql = spark.sql(
       "SELECT hashed_token_counts(array('a', NULL, 'a'), 4) AS c")

@@ -50,7 +50,6 @@ class LongVecSumSpec extends SparkSpec {
   }
 
   test("registers as a SQL aggregate") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val out = spark.sql(
       "SELECT long_vec_sum(x) FROM VALUES (array(1L, 2L)), (array(3L, 4L)) t(x)")

@@ -42,7 +42,6 @@ class MaskBitPairsSpec extends SparkSpec {
   }
 
   test("registers as a SQL function; NULL mask yields NULL") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     assert(spark.sql("SELECT mask_bit_pairs(CAST(5 AS BIGINT)) AS p")
       .as[Seq[Int]].head() === Seq(0, 2, 2 * 64 + 2))

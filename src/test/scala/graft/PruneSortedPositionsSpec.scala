@@ -83,7 +83,6 @@ class PruneSortedPositionsSpec extends SparkSpec {
   }
 
   test("registers as a SQL function") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val r = spark.sql(
       "SELECT prune_sorted_positions(array('a','b','c','d'), array(1, 3)) AS k")

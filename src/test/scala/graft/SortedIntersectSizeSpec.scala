@@ -78,7 +78,6 @@ class SortedIntersectSizeSpec extends SparkSpec {
   }
 
   test("registers as a SQL function") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val r = spark.sql(
       "SELECT sorted_intersect_size(array('a','b','d'), array('b','c','d')) AS n")

@@ -29,7 +29,6 @@ class VecDotSpec extends SparkSpec {
   }
 
   test("vec_dot registers as a SQL function via GraftFunctions") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val r = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
@@ -59,7 +58,6 @@ class VecDotSpec extends SparkSpec {
         array(lit(1.0), lit(-1.0))).as("d")).as[Double].head()
     assert(d === (0.5f.toDouble * 1.0) + (-1.5f.toDouble * -1.0))
     // SQL path coerces int arrays via the registered builder
-    graft.functions.GraftFunctions.register(spark)
     val s = spark.sql("SELECT vec_dot(array(1, 2), array(3.0D, 4.0D)) AS d")
       .as[Double].head()
     assert(s === 11.0)
@@ -94,7 +92,6 @@ class VecDotSpec extends SparkSpec {
         array(lit(3L), lit(4L))).as("d"))
       .as[Option[Long]].head()
     assert(nullElem === None)
-    graft.functions.GraftFunctions.register(spark)
     val s = spark.sql("SELECT long_vec_dot(array(1, 2), array(3, 4)) AS d")
       .as[Long].head()
     assert(s === 11L)

@@ -59,7 +59,6 @@ class VocabCountsSpec extends SparkSpec {
       .collect().head
     assert(nullIn.isNullAt(0))
     // null ELEMENTS count nothing
-    GraftFunctions.register(spark)
     val nullElem = spark.sql("SELECT vocab_counts(array('a', NULL, 'a'), array('a')) AS c")
       .as[Seq[Long]].head()
     assert(nullElem === Seq(2L))
@@ -67,7 +66,6 @@ class VocabCountsSpec extends SparkSpec {
 
   test("SQL registration enforces the foldable-vocab contract") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT vocab_counts(array('x', 'y', 'x'), array('x', 'z')) AS c")
       .as[Seq[Long]].head()
@@ -80,7 +78,6 @@ class VocabCountsSpec extends SparkSpec {
   }
 
   test("SQL registration rejects NULL vocab, NULL vocab elements, and duplicate needles with the contract error") {
-    GraftFunctions.register(spark)
     // a foldable NULL array must raise the contract error, not NPE
     val nullVocab = intercept[Exception] {
       spark.sql("SELECT vocab_counts(array('x'), CAST(NULL AS ARRAY<STRING>))")

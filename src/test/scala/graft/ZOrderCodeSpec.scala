@@ -31,7 +31,6 @@ class ZOrderCodeSpec extends SparkSpec {
   }
 
   test("zorder_code registers as a SQL function (integral args coerced)") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val r = spark.sql("SELECT zorder_code(3, 0L) AS z").as[Long].head()
     assert(r === 5L)
