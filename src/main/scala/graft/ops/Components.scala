@@ -135,90 +135,4 @@ object Components {
         s"(graph diameter exceeds maxIter); raise maxIter")
     labels.select(col("id").as("doc_id"), col("label").as("component"))
   }
-
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR edge
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the published O(log² n)-round (O(log n) in
-    * practice) alternative to label propagation, implemented for the
-    * measured comparison against [[connectedComponents]]' pointer-jumping
-    * loop at the 10M-doc rung (BASELINE.md records the verdict).
-    *
-    * Each round rewrites the EDGE LIST instead of a label table:
-    *  - large-star: every node's strictly-larger neighbors re-attach to
-    *    the minimum of its closed neighborhood (per-group min + join —
-    *    no per-node neighbor lists materialize);
-    *  - small-star: on (hi, lo)-oriented edges, every smaller neighbor
-    *    and the node itself attach to the group minimum.
-    * Both keep every emitted edge inside the original component (the min
-    * is a member of the neighborhood), and the fixed point of the
-    * combined step is a star forest rooted at component minima — so at
-    * convergence the edge list IS the answer. Round cost: two
-    * (groupBy + self-join + distinct) passes over the current edge list,
-    * co-partitioned on the group key by construction; per-round frames
-    * are localCheckpoint'ed for the same lineage-truncation reason as
-    * the propagation loop.
-    *
-    * @return (doc_id, component) for every node in `edges`, identical
-    *         contract to [[connectedComponents]]. */
-  def connectedComponentsStar(edges: DataFrame, src: String = "doc1",
-                              dst: String = "doc2",
-                              maxIter: Int = 30): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b")).persist()
-    val m = e0.count()
-    val parts = math.max(1L, math.min(m / 500000L + 1,
-      spark.sparkContext.defaultParallelism.toLong)).toInt
-    val nodes = e0.select(col("a").as("id"))
-      .unionAll(e0.select(col("b").as("id")))
-      .repartition(parts, col("id")).distinct().localCheckpoint()
-    // canonical (hi, lo) orientation from the start: small-star's group
-    // key is the hi endpoint
-    var cur = e0
-      .select(greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b"))
-      .repartition(parts, col("a")).distinct().localCheckpoint()
-    e0.unpersist()
-    var converged = m == 0
-    var i = 0
-    while (!converged && i < maxIter) {
-      // LARGE-STAR over symmetric neighborhoods: m(u) = min(N(u) ∪ {u});
-      // emit (v, m(u)) for every neighbor v > u. v > u ≥ m(u) keeps the
-      // (hi, lo) orientation without re-sorting the pair.
-      val sym = cur.unionAll(cur.select(col("b").as("a"), col("a").as("b")))
-        .repartition(parts, col("a"))
-      val mins = sym.groupBy(col("a"))
-        .agg(min(col("b")).as("mb"))
-        .select(col("a"), least(col("a"), col("mb")).as("m"))
-      val ls = sym.join(mins, Seq("a"))
-        .filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .repartition(parts, col("a")).distinct().localCheckpoint()
-      // SMALL-STAR on (hi, lo) edges: every lo-neighbor and u itself
-      // attach to min(N⁻(u)); (v, m) always has v > m (m is the min).
-      val mins2 = ls.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val ss = ls.join(mins2, Seq("a"))
-        .select(col("b").as("v"), col("m"))
-        .unionAll(mins2.select(col("a").as("v"), col("m")))
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .repartition(parts, col("a")).distinct().localCheckpoint()
-      // fixed point of the combined step = star forest = done. Both
-      // frames are checkpointed and co-partitioned on "a", so the
-      // symmetric difference plans as co-partitioned anti joins.
-      converged = ss.exceptAll(cur).isEmpty && cur.exceptAll(ss).isEmpty
-      cur = ss
-      i += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds; " +
-        "raise maxIter")
-    // at the fixed point every non-root has exactly one (node, root)
-    // edge; the groupBy-min is defensive, roots label themselves
-    val lbl = cur.groupBy(col("a")).agg(min(col("b")).as("component"))
-      .withColumnRenamed("a", "id")
-    nodes.join(lbl, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("component"), col("id")).as("component"))
-  }
 }

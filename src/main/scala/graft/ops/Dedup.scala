@@ -73,23 +73,13 @@ object Dedup {
   }
 
   /** Per-token md5 hashes — materialize this as its own column before
-    * [[simhash16FromHashes]]: the 16 bit-sums each re-read the hash array,
-    * so an inlined hash expression would be recomputed 16x per row. */
+    * [[simhashFromHashes]]: the bit-sums each re-read the hash array,
+    * so an inlined hash expression would be recomputed once per bit. */
   def tokenHashes(toks: Column): Column = transform(toks, t => md5(t))
 
-  /** 16-bit SimHash over the token multiset, bits from md5 hex nibbles:
-    * bit j set iff sum over tokens of (+1 if digit_j(md5(token)) >= 8
-    * else -1) is positive. */
-  def simhash16(toks: Column): Column =
-    simhash16FromHashes(tokenHashes(toks))
-
-  /** SimHash from a pre-materialized token-hash column (the staged form —
-    * pass an attribute, not an expression, on hot paths). */
-  def simhash16FromHashes(hashes: Column): Column =
-    simhashFromHashes(hashes, 16)
-
-  /** Width-parameterized SimHash: bit j comes from md5 hex digit j (md5
-    * supplies up to 32 nibbles). 16 bits is compact but weakly
+  /** Width-parameterized SimHash over the token multiset: bit j is set iff
+    * the sum over tokens of (+1 if md5 hex digit j >= 8 else -1) is
+    * positive (md5 supplies up to 32 nibbles). 16 bits is compact but weakly
     * discriminating on topically-similar corpora; 32 bits is the
     * near-dup-banding width (q44). */
   def simhashFromHashes(hashes: Column, nBits: Int): Column = {

@@ -35,6 +35,10 @@ object SimilarityQueries {
       posexplode(Similarity.srpBucketsAdaptive(col("embedding"), signs, tables, pn)))
     .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bucket"))
 
+  /** Most pre-distinct candidate rows [[candFitsBroadcast]] lets the
+    * fetch-back take its static broadcast hint with. */
+  private val maxBroadcastCands = 1000000L
+
   /** OOM guard for the statically-hinted candidate fetch-back broadcast
     * (q23/q185). The "~32 adaptive bucket occupancy" bound that justifies
     * the static `broadcast()` is an AVERAGE-case property, not structural:
@@ -49,17 +53,15 @@ object SimilarityQueries {
     * broadcast probe list. Above the threshold the caller falls back to
     * the unhinted join and AQE sizes it from runtime stats: the slow path
     * is a slowdown, the fast path misapplied is a cliff. */
-  private def candFitsBroadcast(spark: SparkSession, banded: DataFrame,
+  private def candFitsBroadcast(banded: DataFrame,
       probes: DataFrame): Boolean = {
-    val limit = spark.conf.getOption("spark.graft.ann.broadcastCandLimit")
-      .map(_.toLong).getOrElse(1000000L)
     val r = banded.groupBy(col("tbl"), col("bucket"))
       .agg(count(lit(1)).as("occ"))
       .join(broadcast(probes.select(col("tbl"), col("bucket"))),
         Seq("tbl", "bucket"))
       .agg(sum(col("occ"))).head()
     val bound = if (r.isNullAt(0)) 0L else r.getLong(0)
-    bound <= limit
+    bound <= maxBroadcastCands
   }
 
   /** Apply the static fetch-back build-side hint only when
@@ -127,7 +129,7 @@ object SimilarityQueries {
     // ON AVERAGE, so the hint is gated on a measured occupancy check
     // (candFitsBroadcast) and degrades to the AQE path on skewed corpora.
     hintIfBounded(cand.join(broadcast(q), Seq("qid")),
-      candFitsBroadcast(spark, banded, qb))
+      candFitsBroadcast(banded, qb))
       .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")), Seq("neighbor_id"))
       .select(col("qid"), col("neighbor_id"), cos.as("cs"))
       .withColumn("rn", row_number().over(w))
@@ -182,7 +184,7 @@ object SimilarityQueries {
     hintIfBounded(cand
       .withColumn("n_cand", count(lit(1)).over(Window.partitionBy(col("qid"))))
       .join(broadcast(q), Seq("qid")),
-      candFitsBroadcast(spark, banded, qp))
+      candFitsBroadcast(banded, qp))
       .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")), Seq("neighbor_id"))
       .select(col("qid"), col("n_cand"), col("neighbor_id"), cos.as("cs"))
       .withColumn("rn", row_number().over(w))

@@ -629,7 +629,7 @@ object TextQueries {
   private def simhashed(spark: SparkSession, dir: String): DataFrame =
     spreadDocs(spark, dir)
       .select(col("doc_id"), TA.tokens(col("text")).as("toks"))
-      // native SimHash, not the HOF `Dedup.simhash16FromHashes` builder:
+      // native SimHash, not the HOF `Dedup.simhashFromHashes` builder:
       // the HOF form re-aggregates the md5-hex array once PER BIT with a
       // string substr+conv per token — 16 interpreted array scans per doc,
       // measured 476 cpu-s at the 100× rung for what is one digest and 16
@@ -710,24 +710,13 @@ object TextQueries {
     // cache excuse — release the signature frame on the way out (the
     // ContractSpec cache-lifetime sweep enforces exactly this).
     //
-    // `spark.graft.components.algo` = jump (default) | star picks the
-    // iteration scheme — pointer-jumping label propagation vs the
-    // published large-star/small-star edge contraction
-    // ([[graft.ops.Components]]). Both are spec-pinned to the union-find
-    // oracle and produce IDENTICAL labels, so the conf is a pure ladder
-    // knob (output-identity class, like digestHex); BASELINE.md records
-    // the 10M-doc comparison that chose the default.
-    val cc: DataFrame => DataFrame =
-      spark.conf.getOption("spark.graft.components.algo")
-        .getOrElse("jump") match {
-        case "jump" => graft.ops.Components.connectedComponents(_)
-        case "star" => graft.ops.Components.connectedComponentsStar(_)
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.components.algo must be jump|star, got $other")
-      }
+    // One iteration scheme: pointer-jumping label propagation. The
+    // published large-star/small-star edge contraction tied with it at
+    // 5M and 10M docs (BASELINE.md, r9: −4 % / +7 % wall), so only one
+    // is kept.
     val sims = simhashSims(spark, dir)
-    try cc(simhashPairsFrom(sims, mankuBlocks(spark, dir))
-      .select("doc1", "doc2"))
+    try graft.ops.Components.connectedComponents(
+      simhashPairsFrom(sims, mankuBlocks(spark, dir)).select("doc1", "doc2"))
     finally sims.unpersist(blocking = true)
   }
 

@@ -271,48 +271,6 @@ object Streams {
       }
   }
 
-  /** [[runningUserStats]] re-expressed on the arbitrary-stateful-v2 API
-    * (`transformWithState`, Spark 4): a [[StatefulProcessor]] holding one
-    * typed [[ValueState]] per user. Same semantics as the
-    * flatMapGroupsWithState form (StreamingSpec asserts equality); what
-    * the v2 API buys at scale:
-    *  - state schema is declared to the store (RocksDB provider required),
-    *    enabling schema evolution and state rebalancing,
-    *  - per-state TTL ([[TTLConfig]]) instead of whole-group timeouts —
-    *    the store expires cold users without a timer per key,
-    *  - multiple independent state variables per key if the operator
-    *    grows (value/list/map state), not one monolithic case class. */
-  class RunningStatsProcessor extends StatefulProcessor[Long, Event, UserRunning] {
-    @transient private var st: ValueState[UserRunning] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[UserRunning](
-        "running", Encoders.product[UserRunning], TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[UserRunning] = {
-      val prev =
-        if (st.exists()) st.get()
-        else UserRunning(key, 0L, 0.0, new java.sql.Timestamp(0L))
-      val next = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        .foldLeft(prev) { (s, e) =>
-          UserRunning(key, s.n_events + 1, s.total_value + e.value,
-            if (e.ts.after(s.last_ts)) e.ts else s.last_ts)
-        }
-      st.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  /** transformWithState needs the RocksDB state store; set
-    * `spark.sql.streaming.stateStore.providerClass` to
-    * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
-    * on the session before starting the query. */
-  def runningUserStatsV2(events: Dataset[Event]): Dataset[UserRunning] = {
-    implicit val enc = Encoders.product[UserRunning]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new RunningStatsProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
-
   /** One LSH band-bucket claim of an arriving document (key `bkey` =
     * "band:band_key", the same 6-band MinHash banding as batch q19). */
   case class BandClaim(bkey: String, doc_id: Long)
@@ -321,11 +279,30 @@ object Streams {
     * the already-admitted `canonical_id`. */
   case class DupHit(doc_id: Long, bkey: String, canonical_id: Long)
 
-  /** Per-bucket owner state: the FIRST document to claim a band bucket
-    * owns it forever (within-batch ties go to the lower doc_id, so a
-    * batch's outcome is arrival-order independent and deterministic);
-    * every later claimant emits a [[DupHit]]. State is one long per
-    * bucket — the minimum any online near-dup filter must remember. */
+  /** The band-owner rule, one bucket's micro-batch at a time: the FIRST
+    * document to claim a band bucket owns it (within-batch ties go to the
+    * lower doc_id, so a batch's outcome is arrival-order independent and
+    * deterministic); every later claimant yields a [[DupHit]] against the
+    * owner. `owner` is -1 while the bucket is unowned; returns the owner
+    * after the batch. A plain loop: every micro-batch runs it per bucket. */
+  private def claimBucket(owner: Long, bkey: String,
+      rows: Iterator[BandClaim]): (Long, Iterator[DupHit]) = {
+    val ids = rows.map(_.doc_id).toArray
+    java.util.Arrays.sort(ids)
+    val hits = new scala.collection.mutable.ArrayBuffer[DupHit]
+    var own = owner
+    var i = 0
+    while (i < ids.length) {
+      if (own < 0) own = ids(i)
+      else if (ids(i) != own) hits += DupHit(ids(i), bkey, own)
+      i += 1
+    }
+    (own, hits.iterator)
+  }
+
+  /** Per-bucket owner state on `transformWithState`: [[claimBucket]]'s
+    * rule with the owner held forever. State is one long per bucket —
+    * the minimum any online near-dup filter must remember. */
   class BandOwnerProcessor extends StatefulProcessor[String, BandClaim, DupHit] {
     @transient private var owner: ValueState[Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -333,42 +310,33 @@ object Streams {
         "owner", Encoders.scalaLong, TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[BandClaim],
                                  timerValues: TimerValues): Iterator[DupHit] = {
-      var own = if (owner.exists()) owner.get() else -1L
-      val out = rows.toSeq.sortBy(_.doc_id).flatMap { r =>
-        if (own < 0) { own = r.doc_id; None }
-        else if (r.doc_id == own) None
-        else Some(DupHit(r.doc_id, key, own))
-      }
+      val (own, hits) =
+        claimBucket(if (owner.exists()) owner.get() else -1L, key, rows)
       if (own >= 0) owner.update(own)
-      out.iterator
+      hits
     }
   }
 
-  /** [[BandOwnerProcessor]]'s semantics with a HORIZON: ownership lapses
-    * — and the state entry is physically `remove()`d — after `ttlMs` of
-    * bucket silence, so live RocksDB keys are bounded by the horizon's
-    * bucket working set (ingest rate × 6 bands × horizon), constant in
-    * corpus size. Each sighting re-arms the timeout (update-on-touch), so
-    * a hot bucket keeps its canonical owner indefinitely while cold
-    * buckets age out; a post-horizon re-arrival is readmitted as a new
-    * canonical — the recall-for-memory trade, stated.
+  /** [[claimBucket]]'s rule with a HORIZON: ownership lapses — and the
+    * state entry is physically `remove()`d — after `ttlMs` of bucket
+    * silence, so live RocksDB keys are bounded by the horizon's bucket
+    * working set (ingest rate × 6 bands × horizon), constant in corpus
+    * size. Each sighting re-arms the timeout (update-on-touch), so a hot
+    * bucket keeps its canonical owner indefinitely while cold buckets age
+    * out; a post-horizon re-arrival is readmitted as a new canonical —
+    * the recall-for-memory trade, stated.
     *
-    * Deliberately the V1 API (`flatMapGroupsWithState` +
-    * `ProcessingTimeTimeout`), not state-v2 TTL. History: the r7 build
-    * could not PLAN `transformWithState` under `TimeMode.ProcessingTime`
-    * (NPE constructing TransformWithStateExec — PythonSQLMetrics read an
-    * unset session); the r8 retest shows the current build plans and
-    * runs it, and StreamingSpec pins the v2 twin's semantics
-    * ([[BandOwnerTtlProcessor]]). v1 stays load-bearing on the retained
-    * ground: `TTLConfig` only FILTERS expired values on read; the v1
-    * timeout callback is where the store actually shrinks, and bounded
-    * PHYSICAL state is the horizon's purpose. Operational note shared by ANY
-    * processing-time-timer operator (both APIs): the operator requests a
-    * batch on every trigger, so `processAllAvailable` never sees its
-    * no-work signal and `Trigger.AvailableNow` never self-terminates —
-    * drive such queries with a real processing-time trigger and stop them
-    * by observed progress (see StreamingSpec / the streamdedup probe). */
-  private def bandOwnerWithHorizon(claims: org.apache.spark.sql.Dataset[BandClaim],
+    * The v1 API (`flatMapGroupsWithState` + `ProcessingTimeTimeout`),
+    * not state-v2 `TTLConfig`: `TTLConfig` only FILTERS expired values on
+    * read, while the v1 timeout callback is where the store actually
+    * shrinks, and bounded PHYSICAL state is the horizon's purpose.
+    * Operational note shared by ANY processing-time-timer operator (both
+    * APIs): the operator requests a batch on every trigger, so
+    * `processAllAvailable` never sees its no-work signal and
+    * `Trigger.AvailableNow` never self-terminates — drive such queries
+    * with a real processing-time trigger and stop them by observed
+    * progress (see StreamingSpec). */
+  private def bandOwnerWithHorizon(claims: Dataset[BandClaim],
       ttlMs: Long): Dataset[DupHit] = {
     implicit val outEnc = Encoders.product[DupHit]
     implicit val stEnc = Encoders.scalaLong
@@ -378,59 +346,28 @@ object Streams {
         (bkey: String, rows: Iterator[BandClaim], st: GroupState[Long]) =>
           if (st.hasTimedOut) { st.remove(); Iterator.empty }
           else {
-            var own = st.getOption.getOrElse(-1L)
-            val out = rows.toSeq.sortBy(_.doc_id).flatMap { r =>
-              if (own < 0) { own = r.doc_id; None }
-              else if (r.doc_id == own) None
-              else Some(DupHit(r.doc_id, bkey, own))
-            }
+            val (own, hits) = claimBucket(st.getOption.getOrElse(-1L), bkey, rows)
             if (own >= 0) { st.update(own); st.setTimeoutDuration(ttlMs) }
-            out.iterator
+            hits
           }
       }
   }
 
-  /** State-v2 TTL twin of [[bandOwnerWithHorizon]]: the same
-    * bucket-owner semantics expressed with `transformWithState` +
-    * `TTLConfig` under `TimeMode.ProcessingTime`. The r7 build could not
-    * PLAN this combination (NPE constructing TransformWithStateExec);
-    * the r8 retest shows the current build plans and runs it, so
-    * StreamingSpec now pins the twin's SEMANTICS (in-horizon dup flags
-    * match v1). The horizon pipeline itself deliberately stays on the v1
-    * API: `TTLConfig` only FILTERS expired values on read, while the v1
-    * timeout callback physically `remove()`s the entry — bounded
-    * physical state is the property the horizon exists to buy, so
-    * switching would need a measured RocksDB-size comparison first. */
-  class BandOwnerTtlProcessor(ttlMs: Long)
-      extends StatefulProcessor[String, BandClaim, DupHit] {
-    @transient private var owner: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      owner = getHandle.getValueState[Long]("owner", Encoders.scalaLong,
-        TTLConfig(java.time.Duration.ofMillis(ttlMs)))
-    override def handleInputRows(key: String, rows: Iterator[BandClaim],
-                                 timerValues: TimerValues): Iterator[DupHit] = {
-      var own = if (owner.exists()) owner.get() else -1L
-      val out = rows.toSeq.sortBy(_.doc_id).flatMap { r =>
-        if (own < 0) { own = r.doc_id; None }
-        else if (r.doc_id == own) None
-        else Some(DupHit(r.doc_id, key, own))
-      }
-      if (own >= 0) owner.update(own) // update-on-touch re-arms the TTL
-      out.iterator
-    }
-  }
-
-  /** [[streamingNearDupHits]]'s claim pipeline wired to the v2 TTL
-    * processor — exists solely for StreamingSpec's incompatibility pin. */
-  def streamingNearDupHitsV2Ttl(docs: DataFrame,
-                                ttlMs: Long): Dataset[DupHit] = {
+  /** The shared map-side claim pipeline: doc → 6 LSH band-bucket claims
+    * (the identical native-expression chain as batch q19). */
+  private def claimsOf(docs: DataFrame): Dataset[BandClaim] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    claimsOf(docs)
-      .groupByKey(_.bkey)(Encoders.STRING)
-      .transformWithState(new BandOwnerTtlProcessor(ttlMs),
-        TimeMode.ProcessingTime(), OutputMode.Append())(
-        Encoders.product[DupHit])
+    import graft.ops.{Dedup, TextAnalysis => TA}
+    docs
+      .select(col("doc_id").cast("long").as("doc_id"),
+        Dedup.shingles3(TA.tokens(col("text"))).as("sh"))
+      .select(col("doc_id"), explode(Dedup.lshBands(
+        Dedup.minhashSignature(col("sh")))).as("bb"))
+      .filter(col("bb.band_key").isNotNull)
+      .select(concat(col("bb.band").cast("string"), lit(":"),
+        col("bb.band_key")).as("bkey"), col("doc_id"))
+      .as[BandClaim]
   }
 
   /** Streaming near-duplicate detection at INGEST — the online twin of the
@@ -468,23 +405,6 @@ object Streams {
     * batch parity for in-horizon arrivals and the expire-readmit
     * behavior past the horizon; see [[bandOwnerWithHorizon]] for why the
     * horizon path is the v1 state API and how to drive such a query. */
-  /** The shared map-side claim pipeline: doc → 6 LSH band-bucket claims
-    * (the identical native-expression chain as batch q19). */
-  private def claimsOf(docs: DataFrame): Dataset[BandClaim] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import graft.ops.{Dedup, TextAnalysis => TA}
-    docs
-      .select(col("doc_id").cast("long").as("doc_id"),
-        Dedup.shingles3(TA.tokens(col("text"))).as("sh"))
-      .select(col("doc_id"), explode(Dedup.lshBands(
-        Dedup.minhashSignature(col("sh")))).as("bb"))
-      .filter(col("bb.band_key").isNotNull)
-      .select(concat(col("bb.band").cast("string"), lit(":"),
-        col("bb.band_key")).as("bkey"), col("doc_id"))
-      .as[BandClaim]
-  }
-
   def streamingNearDupHits(docs: DataFrame,
       horizon: Option[java.time.Duration] = None): Dataset[DupHit] = {
     val spark = docs.sparkSession

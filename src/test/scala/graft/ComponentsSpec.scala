@@ -4,7 +4,8 @@ import graft.ops.Components
 
 /** Label propagation on known graph shapes: a chain (forces transitive
   * merging over multiple rounds), a triangle (cycle), and an isolated
-  * pair — plus convergence inside the round budget. */
+  * pair — plus convergence inside the round budget and a loud failure
+  * outside it. */
 class ComponentsSpec extends SparkSpec {
 
   test("chain, triangle, and pair collapse to min-id components") {
@@ -37,7 +38,7 @@ class ComponentsSpec extends SparkSpec {
     assert(Components.connectedComponents(edges).count() === 0)
   }
 
-  test("random graphs match a driver-side union-find oracle (both algorithms)") {
+  test("random graphs match a driver-side union-find oracle") {
     import spark.implicits._
     val rnd = new scala.util.Random(42) // fixed seed: reproducible
     for (trial <- 1 to 3) {
@@ -64,32 +65,28 @@ class ComponentsSpec extends SparkSpec {
       val got = Components.connectedComponents(edges.toDF("doc1", "doc2"))
         .as[(Long, Long)].collect().toMap
       assert(got === expected, s"trial $trial")
-      val gotStar = Components
-        .connectedComponentsStar(edges.toDF("doc1", "doc2"))
-        .as[(Long, Long)].collect().toMap
-      assert(gotStar === expected, s"star trial $trial")
     }
   }
 
-  test("star contraction: known shapes, empty input, and long-chain depth") {
+  // a 64-node chain (diameter 63): pointer jumping doubles reach per
+  // round, so it closes in O(log diameter) rounds
+  private def chain64 = {
     import spark.implicits._
-    val edges = Seq(
-      (2L, 1L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 12L), (12L, 10L),
-      (20L, 21L)).toDF("doc1", "doc2")
-    val got = Components.connectedComponentsStar(edges)
+    (1L until 64L).map(i => (i, i + 1)).toDF("doc1", "doc2")
+  }
+
+  test("a 64-node chain converges within the default round budget") {
+    import spark.implicits._
+    val labels = Components.connectedComponents(chain64)
       .as[(Long, Long)].collect().toMap
-    assert(got === Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L,
-      20L -> 20L, 21L -> 20L))
-    val empty = Seq.empty[(Long, Long)].toDF("doc1", "doc2")
-    assert(Components.connectedComponentsStar(empty).count() === 0)
-    // a 64-node chain (diameter 63) must close well inside the round
-    // budget — the O(log n) claim on the shape that punishes O(diameter)
-    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("doc1", "doc2")
-    val labels = Components.connectedComponentsStar(chain, maxIter = 12)
-      .as[(Long, Long)].collect().toMap
-    assert(labels.values.toSet === Set(1L) && labels.size === 64)
+    assert(labels.size === 64)
+    assert(labels.values.toSet === Set(1L))
+  }
+
+  test("too few rounds for the diameter fails loudly instead of truncating") {
+    val e = intercept[IllegalStateException] {
+      Components.connectedComponents(chain64, maxIter = 2).count()
+    }
+    assert(e.getMessage.contains("did not converge in 2 rounds"))
   }
 }

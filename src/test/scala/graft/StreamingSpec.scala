@@ -237,86 +237,11 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Double)].collect()
     assert(rows.map(_._1).max === 5L)
     assert(rows.find(_._1 == 5L).get._2 === (1.0 + 2.0 + 3.0 + 4.0 + 3.0))
-  }
-
-  test("transformWithState (state v2, RocksDB store) matches flatMapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[Event]
-      val q = Streams.runningUserStatsV2(ms.toDS())
-        .writeStream.format("memory").queryName("runv2")
-        .outputMode(OutputMode.Update).start()
-      ms.addData(batch1); q.processAllAvailable()
-      ms.addData(batch2); q.processAllAvailable()
-      q.stop()
-      // identical final state to the v1 (flatMapGroupsWithState) operator:
-      // user 1 folds 5 events totalling 13.0, user 2 folds 2 views
-      val u1 = spark.table("runv2").filter(col("user_id") === 1)
-        .select("n_events", "total_value").as[(Long, Double)].collect()
-      assert(u1.map(_._1).max === 5L)
-      assert(u1.find(_._1 == 5L).get._2 === 13.0)
-      val u2 = spark.table("runv2").filter(col("user_id") === 2)
-        .select("n_events", "total_value").as[(Long, Double)].collect()
-      assert(u2.map(_._1).max === 2L)
-      assert(u2.find(_._1 == 2L).get._2 === 30.0)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("state-v2 TTL twin (transformWithState + TimeMode.ProcessingTime) " +
-      "plans on this build and matches the v1 horizon semantics in-horizon") {
-    // r7 pinned this combination as un-plannable (NPE constructing
-    // TransformWithStateExec); the r8 retest shows the current build
-    // PLANS AND RUNS it — so the pin flips to a semantics check: the v2
-    // TTL twin must flag the same in-horizon duplicates the v1
-    // flatMapGroupsWithState path does. The horizon pipeline itself
-    // stays on v1 (bandOwnerWithHorizon): TTLConfig only FILTERS expired
-    // values on read, while the v1 timeout callback physically remove()s
-    // the entry — the property the horizon exists to buy.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[(Long, String)]
-      ms.addData(Seq((1L, "alpha beta gamma delta epsilon zeta"),
-        (2L, "alpha beta gamma delta epsilon zeta"),
-        (3L, "utterly unrelated wording nothing shared here at all")))
-      val q = Streams.streamingNearDupHitsV2Ttl(
-          ms.toDF().toDF("doc_id", "text"), ttlMs = 600000)
-        .writeStream.format("memory").queryName("neardup_v2ttl")
-        .outputMode(OutputMode.Append).start()
-      // drive by observed progress, not processAllAvailable — a
-      // processing-time operator may request batches on every trigger
-      val deadline = System.currentTimeMillis() + 60000
-      while (q.exception.isEmpty &&
-          !q.recentProgress.exists(_.numInputRows > 0) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(200)
-      // allow the emitted batch to commit to the memory sink
-      Thread.sleep(1000)
-      val ex = q.exception
-      q.stop()
-      ex.foreach(throw _)
-      val hits = spark.table("neardup_v2ttl")
-        .select("doc_id", "canonical_id").distinct()
-        .as[(Long, Long)].collect().toSet
-      // in-horizon v1 semantics: the later twin flagged against the
-      // earlier owner; the unrelated doc never flagged
-      assert(hits.contains((2L, 1L)), s"expected (2,1) in $hits")
-      assert(!hits.exists(_._1 == 3L), s"doc 3 wrongly flagged: $hits")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // user 2 folds its two views, one per batch
+    val u2 = spark.table("run").filter(col("user_id") === 2)
+      .select("n_events", "total_value").as[(Long, Double)].collect()
+    assert(u2.map(_._1).max === 2L)
+    assert(u2.find(_._1 == 2L).get._2 === 30.0)
   }
 
   test("streaming near-dup flags == batch q19 candidate doc2 set (docs arriving in id order)") {
