@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-import graft.queries.{SimilarityQueries, TextQueries}
+import graft.queries.TextQueries
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,8 +17,7 @@ object Verify {
     // (Confs with spec-pinned OUTPUT IDENTITY — dedup.digestHex,
     // approx.percentile at fixture scale — are deliberately allowed:
     // a green compare under them is evidence, not noise.)
-    Seq("spark.graft.audit.sampleDenom" -> TextQueries.sampleDenom.toString,
-        "spark.graft.ann.nProbe" -> SimilarityQueries.nProbe.toString
+    Seq("spark.graft.audit.sampleDenom" -> TextQueries.sampleDenom.toString
     ).foreach { case (k, dflt) =>
       spark.conf.getOption(k).filter(_ != dflt).foreach { v =>
         sys.error(s"$k=$v is a Bench-ladder knob: the DuckDB oracle is " +

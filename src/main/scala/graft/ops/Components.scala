@@ -74,16 +74,13 @@ object Components {
       .distinct() // HashPartitioning(b) ⊆ {a,b} satisfies the agg — no new exchange
       .localCheckpoint()
     e0.unpersist()
-    // lazy checkpoint (r11): same LogicalRDD truncation, but the
-    // materialization folds into round 1's convergence-count job instead
-    // of running its own — the loop is driver/scheduling-bound at small
-    // graph sizes (q51 sf0.1: 2.4 s wall, 1.35 cpu-s), so jobs per round
-    // are the cost model, not bytes (guide §5).
+    // eager, like `half` below: round 1 reads `labels` from two query
+    // stages AQE runs at once, so it is filled before either starts
     var labels = sym.select(col("a").as("id"))
       .repartition(parts, col("id"))
       .distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -92,15 +89,14 @@ object Components {
         .repartition(parts, col("a"))
         .groupBy(col("a").as("id"))
         .agg(min(col("nl")).as("nmin"))
-      // lazy localCheckpoint (r11): the plan handed to the NEXT round is
-      // still a constant-size LogicalRDD, but `half` and `next`
-      // materialize inside the round's ONE convergence-count job (the
-      // checkpoint-marked RDD is persisted on first compute, so the
-      // pointer-jump self-join still computes `half` once) — 3 jobs per
-      // round → 1. The OLD label rides along so convergence is a
+      // `half` is checkpointed eagerly, in its own job: both sides of the
+      // pointer-jump self-join below read it, and AQE runs their two query
+      // stages at once. Filled lazily, the second stage's task would block
+      // on the first one's write lock for the same block (BlockManager's
+      // "already exists on this machine" WARN) instead of reading a stored
+      // one. `next` stays lazy: only the convergence count reads it. The OLD label rides along so convergence is a
       // filter+count over the checkpointed rows — not another
-      // join+shuffle per round (tiny-stage rounds are dominated by
-      // scheduling, so jobs per round are the cost model).
+      // join+shuffle per round.
       // no repartition here: a left-outer join streams the LEFT side, so
       // the output inherits labels' HashPartitioning(id, parts) whether
       // neighborMin is broadcast or co-partitioned — the checkpoint below
@@ -110,7 +106,7 @@ object Components {
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
           col("label").as("old"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       // pointer jump: label <- label(label). Every label IS a node id (it
       // started as one and only ever adopts other nodes' ids), so the
       // lookup side covers every key; left-join defensively anyway. The

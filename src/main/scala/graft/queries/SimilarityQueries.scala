@@ -228,15 +228,15 @@ object SimilarityQueries {
       .distinct()
   }
 
-  private val kCentroids = 8
-  /** q29's default `spark.graft.ann.nProbe`, the setting the oracle is
-    * built for (Verify rejects any other). */
+  /** q29's probe width: the nearest coarse cells each query probes. q188
+    * prices the dial, measuring recall at nProbe ∈ {1, 2, 4} in one
+    * oracle-checked table. */
   val nProbe = 2
 
   /** ANN via IVF (inverted-file) cells — the second scale path next to
     * SRP-LSH. The coarse quantizer is TRAINED: q142's `kmeansRounds`
-    * Lloyd rounds over the corpus (seeded by the first `kCentroids`
-    * vectors, bit-exact integer recurrence), whose round-3 centroid means
+    * Lloyd rounds over the corpus (seeded by the first 8 vectors,
+    * bit-exact integer recurrence), whose round-3 centroid means
     * are collected driver-side — an IVF index's centroid table is tiny by
     * design (k·d values) — and inlined as literals, so CELL ASSIGNMENT IS
     * A PURE NARROW MAP: no shuffle, and at 100 TB `cell` becomes the
@@ -246,20 +246,10 @@ object SimilarityQueries {
     * corpus, amortized over every query against the index; the oracle
     * replays the identical integer recurrence so the composition stays
     * hash-exact.) */
-  def q29AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    // conf'd probe width (`spark.graft.ann.nProbe`, default 2): the
-    // recall/cost dial — probing n nearest coarse cells reuses the SAME
-    // broadcast centroid frame and adds no exchange, only candidate
-    // volume. The oracle is built for the default; Verify fails fast on
-    // a non-default setting (a Bench-ladder knob), and q188's audit
-    // carries the measured recall at nProbe ∈ {1, 2, 4} so the dial is
-    // turned on evidence, not hope.
-    val np = spark.conf.getOption("spark.graft.ann.nProbe")
-      .map(_.toInt).getOrElse(nProbe)
-    require(np >= 1 && np <= kCentroids,
-      s"spark.graft.ann.nProbe must be in [1, $kCentroids], got $np")
-    ivfTopK(spark, dir, ivfCentroids(spark, dir), np)
-  }
+  def q29AnnIvf(spark: SparkSession, dir: String): DataFrame =
+    // probing n nearest coarse cells reuses the SAME broadcast centroid
+    // frame and adds no exchange, only candidate volume
+    ivfTopK(spark, dir, ivfCentroids(spark, dir), nProbe)
 
   /** The trained coarse quantizer: q142 round-3 centroids, exact integer
     * c_units -> the SAME double (c_units / 1e6) the oracle computes.
@@ -360,7 +350,7 @@ object SimilarityQueries {
     * top-3 (at most two vectors order before it globally) — so the
     * output overlap measured here IS candidate recall@3: auditing
     * outputs audits the candidate sets. This is the number the probe
-    * (q185) and nProbe (q29) knobs buy; compare rows before turning
+    * (q185) knob and q29's nProbe buy; compare rows before turning
     * either in production. Cost shape: the exact arm is the audit's
     * price — linear (8 fixed queries × corpus) and embarrassingly
     * map-parallel; the audit joins are 8-row frames. All outputs are
@@ -1786,8 +1776,8 @@ object SimilarityQueries {
     * kernel is integer SIMD-class work. Output mirrors q213 (sq8-ranked
     * top-5 per probe, flagged vs the exact float top-5) so the two
     * audits read side by side: q213 prices the quantizer alone,
-    * q214 prices quantizer + candidate bounding. Probe width = the q29
-    * default ([[nProbe]]); candidate dedup across overlapping probes
+    * q214 prices quantizer + candidate bounding. Probe width = q29's
+    * ([[nProbe]]); candidate dedup across overlapping probes
     * keeps the ranking well-defined. */
   def q214IvfSq8(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)

@@ -83,6 +83,38 @@ class ComponentsSpec extends SparkSpec {
     assert(labels.values.toSet === Set(1L))
   }
 
+  /** BlockManager's WARNs that a task found another one writing the same
+    * block: two concurrent stages reached one checkpointed partition. */
+  private def blockRaces(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("block-races", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("already exists on this machine")) { seen.add(m); () }
+      }
+    }
+    val logger = LogManager.getLogger("org.apache.spark.storage.BlockManager")
+      .asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try body finally { logger.removeAppender(appender); appender.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("each round fills the frames its concurrent stages share before they start") {
+    // filled lazily, `labels` and `half` raced two stages onto one block
+    // in some of these chains' rounds
+    val races = blockRaces {
+      (1 to 3).foreach(_ => Components.connectedComponents(chain64).collect())
+    }
+    assert(races.isEmpty, races.mkString("\n"))
+  }
+
   test("too few rounds for the diameter fails loudly instead of truncating") {
     val e = intercept[IllegalStateException] {
       Components.connectedComponents(chain64, maxIter = 2).count()

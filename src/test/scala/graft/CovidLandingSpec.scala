@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.graft.shim
 import graft.ops.{CovidOps, Dims, Mart}
 import graft.pipeline.{CovidFixture, CovidPipeline}
 import graft.quality.Quality
@@ -95,22 +92,6 @@ class CovidLandingSpec extends SparkSpec {
 
   /** (jobs, SQL executions) that `body` runs, counted with the bus drained
     * on both sides. */
-  private def jobsAndExecutions(body: => Unit): (Int, Int) = {
-    val jobs, executions = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
-    shim.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; shim.drainListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get, executions.get)
-  }
-
   test("a connector date is one SQL execution of 2 jobs: the extract stage and the keyed write") {
     val lake = freshLake("graft_jobs")
     CovidPipeline.runRange(spark, "2023-03-01", "2023-03-01", lake, counted)

@@ -461,6 +461,53 @@ class OpsEdgeSpec extends SparkSpec {
       .withGlobalRank(empty, Seq(col("k").asc), "r").count() === 0)
   }
 
+  test("GlobalIndex.withGlobalCumSum skips a range partition whose values are all NULL") {
+    import spark.implicits._
+    // 6 rows in 3 range partitions; only k = 1 and k = 6 carry a value, so
+    // the middle partition's total is NULL
+    val df = (1 to 6).map(k => (k, if (k == 1) Some(10L) else if (k == 6) Some(5L)
+      else None)).toDF("k", "v")
+    val got = graft.ops.GlobalIndex
+      .withGlobalCumSum(df, Seq(col("k")), col("v"), "c", numPartitions = 3)
+      .select("k", "c").as[(Int, Long)].collect().toMap
+    assert(got === Map(1 -> 0L, 2 -> 10L, 3 -> 10L, 4 -> 10L, 5 -> 10L, 6 -> 10L))
+  }
+
+  test("GlobalIndex: more partitions than rows matches the driver-side scans") {
+    import spark.implicits._
+    // 16 partitions asked for 5 rows: the range sample caps the cut at one
+    // row per partition, so each NULL row (the first one among them) is a
+    // whole partition whose partial is NULL, as an empty partition's is
+    val rows = Seq((3, Some(7L)), (1, None), (4, Some(2L)), (2, Some(9L)), (5, None))
+    val df = rows.toDF("k", "v")
+    val sorted = rows.sortBy(_._1)
+    val before = sorted.indices.map(i => sorted.take(i).flatMap(_._2))
+    val keys = sorted.map(_._1)
+    val gi = graft.ops.GlobalIndex
+    val ranks = gi.withGlobalRank(df, Seq(col("k")), "r", numPartitions = 16)
+      .select("k", "r").as[(Int, Long)].collect().toMap
+    val sums = gi.withGlobalCumSum(df, Seq(col("k")), col("v"), "c", numPartitions = 16)
+      .select("k", "c").as[(Int, Long)].collect().toMap
+    val maxes = gi.withGlobalRunningMax(df, Seq(col("k")), col("v"), "m", numPartitions = 16)
+      .select("k", "m").as[(Int, Option[Long])].collect().toMap
+    assert(ranks === keys.zip(1L to 5L).toMap)
+    assert(sums === keys.zip(before.map(_.sum)).toMap)
+    assert(maxes === keys.zip(before.map(_.maxOption)).toMap)
+  }
+
+  test("GlobalIndex.withGlobalCumSum reads partition totals in the checkpoint-filling job") {
+    import spark.implicits._
+    val df = (1 to 997).map(i => (i, i % 11)).toDF("k", "v")
+    val (jobs, _) = jobsAndExecutions {
+      graft.ops.GlobalIndex.withGlobalCumSum(df, Seq(col("k")), col("v"), "c"); ()
+    }
+    // range sample, range exchange, then ONE job that fills the checkpoint
+    // and reads each partition's total: 3 jobs. An eager checkpoint job
+    // followed by a groupBy("__pid") collect (its exchange, then its
+    // result) ran 5.
+    assert(jobs === 3)
+  }
+
   private def eventsFixture(rows: Seq[(Long, String, Long, String, Double)]): String = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("edge_ev").toString

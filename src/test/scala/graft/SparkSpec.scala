@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.shim
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -18,6 +22,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def partitionBytes(lake: String, ds: String): Map[String, Seq[Byte]] =
     new java.io.File(s"$lake/day_of_data=$ds").listFiles().map(f =>
       f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  /** Jobs and SQL executions `body` starts, counted by a listener with the
+    * bus drained before and after. */
+  def jobsAndExecutions(body: => Unit): (Int, Int) = {
+    val jobs, executions = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    shim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; shim.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, executions.get)
+  }
 
   /** Staging directories a staged partition replace left under a lake. */
   def stagingEntries(lake: String): Seq[String] =

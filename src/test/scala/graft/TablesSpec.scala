@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
-import org.apache.spark.sql.graft.shim
 import graft.sources.Tables
 
 /** `Tables`' schema memo: a table's parquet schema is inferred once per
@@ -17,20 +14,6 @@ class TablesSpec extends SparkSpec {
     if (name == "events") Tables.events(spark, sfDir)
     else Tables.load(spark, sfDir, name)
 
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    shim.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; shim.drainListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
-
   private def multiset(df: DataFrame): Map[Row, Int] =
     df.collect().groupBy(identity).view.mapValues(_.length).toMap
 
@@ -39,7 +22,7 @@ class TablesSpec extends SparkSpec {
     // key: load it first so the warm pass already sees the final conf
     ("events" +: Tables.names).foreach(load)
     Tables.names.foreach { n =>
-      assert(jobsDuring { load(n); () } === 0, s"reloading $n ran a job")
+      assert(jobsAndExecutions { load(n); () }._1 === 0, s"reloading $n ran a job")
     }
   }
 
