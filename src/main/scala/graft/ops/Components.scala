@@ -27,8 +27,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one shuffle-join on the edge list + one
   * min-aggregate + one n-row self-join on the label key, all
-  * distributed; the driver only checks a converged count, exactly how
-  * Pregel-style systems iterate. Per-round frames are
+  * distributed, with every exchange sized and coalesced by AQE (no
+  * hand-sized width: a checkpointed frame does not hand its partitioning
+  * to a later join); the driver only checks a converged count, exactly
+  * how Pregel-style systems iterate. Per-round frames are
   * localCheckpoint'ed, NOT merely persisted: persist caches data but the
   * LOGICAL plan still embeds every previous round (and the possibly huge
   * edge-query lineage), so analysis cost doubles per round — measured
@@ -44,40 +46,20 @@ object Components {
   def connectedComponents(edges: DataFrame, src: String = "doc1",
                           dst: String = "doc2",
                           maxIter: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    // persist the INPUT first: symmetrization reads it twice, and the edge
-    // lineage may be an expensive query (LSH banding + verify joins).
-    // e0.count() materializes it exactly once and measures the graph.
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b")).persist()
-    val m = e0.count()
-    // size the iteration's shuffles from the MEASURED edge count: label
-    // propagation on a near-dup graph usually runs on a few thousand edges
-    // even when the corpus is 100 TB, and session-default partition counts
-    // make each tiny round pay full scheduling overhead. One partition per
-    // ~500k edges, capped at the session default for billion-edge graphs.
-    // The width is applied PER PLAN via explicit repartition on the loop
-    // frames — never by mutating spark.sql.shuffle.partitions, which would
-    // silently re-plan any concurrent query on the same session. Because
-    // localCheckpoint preserves the physical outputPartitioning in its
-    // LogicalRDD, partitioning BOTH checkpointed frames on the round's
-    // join key (sym by "b", labels by "id" which renames to "b") makes
-    // every round's join AND both aggregates satisfy their required
-    // distributions from the checkpointed layout: the steady-state round
-    // runs with a single parts-wide exchange (the groupBy on "a").
-    val parts = math.max(1L, math.min(m / 500000L + 1,
-      spark.sparkContext.defaultParallelism.toLong)).toInt
-    // localCheckpoint: materialize AND truncate the plan to a LogicalRDD
-    // so no round re-analyzes (or re-plans against) the edge query
-    val sym = e0
-      .unionAll(e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(parts, col("b"))
-      .distinct() // HashPartitioning(b) ⊆ {a,b} satisfies the agg — no new exchange
+    // symmetrize by EXPLODING both directions out of one row, as PageRank
+    // does: the edge lineage (LSH banding + verify joins for q51) is read
+    // once. localCheckpoint: materialize AND truncate the plan to a
+    // LogicalRDD so no round re-analyzes (or re-plans against) the edge
+    // query.
+    val sym = edges.select(explode(array(
+        struct(col(src).as("a"), col(dst).as("b")),
+        struct(col(dst).as("a"), col(src).as("b")))).as("e"))
+      .select("e.*")
+      .distinct()
       .localCheckpoint()
-    e0.unpersist()
     // eager, like `half` below: round 1 reads `labels` from two query
     // stages AQE runs at once, so it is filled before either starts
     var labels = sym.select(col("a").as("id"))
-      .repartition(parts, col("id"))
       .distinct()
       .withColumn("label", col("id"))
       .localCheckpoint()
@@ -86,7 +68,6 @@ object Components {
     while (!converged && i < maxIter) {
       val neighborMin = sym
         .join(labels.select(col("id").as("b"), col("label").as("nl")), Seq("b"))
-        .repartition(parts, col("a"))
         .groupBy(col("a").as("id"))
         .agg(min(col("nl")).as("nmin"))
       // `half` is checkpointed eagerly, in its own job: both sides of the
@@ -94,13 +75,9 @@ object Components {
       // stages at once. Filled lazily, the second stage's task would block
       // on the first one's write lock for the same block (BlockManager's
       // "already exists on this machine" WARN) instead of reading a stored
-      // one. `next` stays lazy: only the convergence count reads it. The OLD label rides along so convergence is a
-      // filter+count over the checkpointed rows — not another
-      // join+shuffle per round.
-      // no repartition here: a left-outer join streams the LEFT side, so
-      // the output inherits labels' HashPartitioning(id, parts) whether
-      // neighborMin is broadcast or co-partitioned — the checkpoint below
-      // preserves that layout for the next round's join.
+      // one. `next` stays lazy: only the convergence count reads it. The
+      // OLD label rides along so convergence is a filter+count over the
+      // checkpointed rows — not another join+shuffle per round.
       val half = labels
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"),

@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import graft.Json
 import graft.ops.{CovidOps, Dims, Mart}
 import graft.quality.Quality
 import graft.sources.Sinks
@@ -134,22 +137,24 @@ object CovidFixture {
     "CHN" -> "China", "RUS" -> "Russia", "USA" -> "US",
     "IND" -> "India", "BRA" -> "Brazil")
 
+  /** One report object; a NULL `province` is written as JSON `null`. */
   private[graft] def report(ds: String, iso: String, country: String,
-                            province: String, i: Int): String = {
+                            province: String, i: Int): ObjectNode = {
     val confirmed = 1000L + i * 37
     val deaths = 10L + i
     val recovered = 500L + i * 11
-    val active = confirmed - deaths - recovered
-    val lat = 10.0 + i * 0.5
-    val lon = 20.0 + i * 0.25
-    val provinceJson = if (province == null) "null" else s""""$province""""
-    s"""{"date":"$ds","active":$active,"deaths":$deaths,"confirmed":$confirmed,
-       |"recovered":$recovered,"active_diff":${i % 7},"deaths_diff":${i % 3},
-       |"confirmed_diff":${i % 11},"recovered_diff":${i % 5},
-       |"last_update":"$ds 23:59:59","fatality_rate":${(deaths.toDouble / confirmed)},
-       |"region":{"iso":"$iso","lat":$lat,"long":$lon,"name":"$country",
-       |"cities":["c${i}a","c${i}b"],"province":$provinceJson}}""".stripMargin
-      .replace("\n", "")
+    val r = Json.obj().put("date", ds)
+      .put("active", confirmed - deaths - recovered).put("deaths", deaths)
+      .put("confirmed", confirmed).put("recovered", recovered)
+      .put("active_diff", i % 7).put("deaths_diff", i % 3)
+      .put("confirmed_diff", i % 11).put("recovered_diff", i % 5)
+      .put("last_update", s"$ds 23:59:59")
+      .put("fatality_rate", deaths.toDouble / confirmed)
+    val region = r.putObject("region").put("iso", iso)
+      .put("lat", 10.0 + i * 0.5).put("long", 20.0 + i * 0.25).put("name", country)
+    region.putArray("cities").add(s"c${i}a").add(s"c${i}b")
+    region.put("province", province)
+    r
   }
 
   /** The full `{"data": [...]}` envelope for one (date, iso) — the payload
@@ -166,7 +171,9 @@ object CovidFixture {
       report(ds, iso, country, "Unknown", ci * 100 + 98),
       report(ds, iso, country, "Recovered", ci * 100 + 99),
       report(ds, iso, country, null, ci * 100 + 97))
-    s"""{"data":[${(real ++ junk).mkString(",")}]}"""
+    val data = Json.obj()
+    data.putArray("data").addAll((real ++ junk).asJava)
+    Json.mapper.writeValueAsString(data)
   }
 
   /** One stage row per (date, iso): the JSON envelope `{"data": [...]}`. */

@@ -539,7 +539,7 @@ object DateTimeQueries {
     * between click and view values, exact. The candidate set is the
     * distinct-cents spine (the max always lands on a data point); both
     * inclusive cumulative counts ride [[graft.ops.GlobalIndex]] prefix
-    * sums (range partition + broadcast offsets — the spine never funnels
+    * sums (range partition + driver-folded offsets — the spine never funnels
     * through one partition), and the comparison stays integer:
     * |cum_a·n_b − cum_b·n_a| over a common denominator n_a·n_b, divided
     * only in the final row. Output: D, the value where it occurs, and

@@ -24,6 +24,16 @@ object shim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+  /** `rddFrame` (a `createDataFrame` over an RDD) with `like`'s size
+    * estimate. Left at `spark.sql.defaultSizeInBytes`, a join would pick
+    * its OTHER side to broadcast, however many rows that side holds. */
+  def withSizeOf(rddFrame: DataFrame, like: DataFrame): DataFrame = {
+    val rdd = rddFrame.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    ofRows(rddFrame.sparkSession, rdd.copy()(
+      rddFrame.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(like.queryExecution.analyzed.stats), None))
+  }
   /** Drain the listener bus so SparkListener-accumulated task metrics
     * (e.g. Bench's per-query shuffle bytes) are complete before reading —
     * `listenerBus` is `private[spark]`, hence exposed here. */

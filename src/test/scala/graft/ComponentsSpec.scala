@@ -115,6 +115,20 @@ class ComponentsSpec extends SparkSpec {
     assert(races.isEmpty, races.mkString("\n"))
   }
 
+  test("the chain, triangle and pair graph closes in 32 jobs") {
+    import spark.implicits._
+    val edges = Seq(
+      (2L, 1L), (2L, 3L), (3L, 4L),
+      (10L, 11L), (11L, 12L), (12L, 10L),
+      (20L, 21L)).toDF("doc1", "doc2")
+    val (jobs, _) = jobsAndExecutions {
+      Components.connectedComponents(edges).collect(); ()
+    }
+    // explode-symmetrized edges and AQE-sized rounds: 32 jobs. A persisted
+    // input with a count() job and hand-sized repartitions ran 35.
+    assert(jobs === 32)
+  }
+
   test("too few rounds for the diameter fails loudly instead of truncating") {
     val e = intercept[IllegalStateException] {
       Components.connectedComponents(chain64, maxIter = 2).count()

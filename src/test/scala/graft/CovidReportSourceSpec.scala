@@ -39,6 +39,21 @@ class CovidReportSourceSpec extends SparkSpec {
     .format("graft.sources.CovidReportSource")
     .option("date", "2023-03-02")
 
+  test("fixture JSON keeps its key order, NULL province and number text") {
+    // both pinned from the string-built fixture this codec replaced
+    assert(Json.mapper.writeValueAsString(
+      CovidFixture.report("2023-03-02", "CHN", "China", null, 97)) ===
+      """{"date":"2023-03-02","active":2915,"deaths":107,"confirmed":4589,""" +
+      """"recovered":1567,"active_diff":6,"deaths_diff":1,"confirmed_diff":9,""" +
+      """"recovered_diff":2,"last_update":"2023-03-02 23:59:59",""" +
+      """"fatality_rate":0.023316626716060145,"region":{"iso":"CHN","lat":58.5,""" +
+      """"long":44.25,"name":"China","cities":["c97a","c97b"],"province":null}}""")
+    val envelope = CovidFixture.envelope("2023-03-02", "RUS", "Russia", 1, 48)
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(envelope.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(sha === "2b1f47242c27e35e3635850f802e72bb51c45ffee393f9eb498ed6556e710b6d")
+  }
+
   test("one input partition per country; rows match the fixture") {
     val df = src.load()
     assert(df.rdd.getNumPartitions === 5)

@@ -508,6 +508,73 @@ class OpsEdgeSpec extends SparkSpec {
     assert(jobs === 3)
   }
 
+  test("GlobalIndex.withGlobalCumSum shuffles its rows once, by range") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case q: QueryStageExec => exchanges(q.plan)
+      case s: ShuffleExchangeExec => s +: s.children.flatMap(exchanges)
+      case other => other.children.flatMap(exchanges)
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        exchanges(qe.executedPlan).foreach(e =>
+          seen.add(e.outputPartitioning.getClass.getSimpleName))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val df = (1 to 997).map(i => (i, i % 11)).toDF("k", "v")
+    org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.GlobalIndex.withGlobalCumSum(df, Seq(col("k")), col("v"), "c").collect()
+      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    // the final AQE plans of the checkpoint and of the collect: the range
+    // exchange, and nothing that re-shuffles the checkpointed rows (a
+    // per-partition window planned a hashpartitioning exchange too)
+    assert(seen.toArray.toSeq === Seq("RangePartitioning"))
+  }
+
+  test("GlobalIndex output keeps its input's size estimate") {
+    import spark.implicits._
+    val df = (1 to 997).map(i => (i, i % 11)).toDF("k", "v")
+    val out = graft.ops.GlobalIndex.withGlobalCumSum(df, Seq(col("k")), col("v"), "c")
+    // left at spark.sql.defaultSizeInBytes, a join with a corpus-sized
+    // frame would broadcast the corpus (q77's token stream did at 10x)
+    assert(out.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1 << 20))
+  }
+
+  test("GlobalIndex scans keep their offsets under a later coalesce(1) or union") {
+    import spark.implicits._
+    val df = (1 to 997).map(i => (i % 13, i, (i * 7) % 101)).toDF("k", "u", "v")
+    val sorted = df.as[(Int, Int, Int)].collect().sortBy { case (k, u, _) => (k, u) }
+    val keys = sorted.map { case (k, u, _) => (k, u) }
+    val ranks = keys.zip(1L to 997L).toMap
+    val sums = keys.zip(sorted.scanLeft(0L)(_ + _._3)).toMap
+    val order = Seq(col("k"), col("u"))
+    val rank = graft.ops.GlobalIndex.withGlobalRank(df, order, "x", numPartitions = 7)
+      .select(lit("rank").as("scan"), col("k"), col("u"), col("x"))
+    val cum = graft.ops.GlobalIndex
+      .withGlobalCumSum(df, order, col("v"), "x", numPartitions = 7)
+      .select(lit("sum").as("scan"), col("k"), col("u"), col("x"))
+    val expect = Map("rank" -> ranks, "sum" -> sums)
+    // coalesce(1) runs every partition in task 0; the union numbers the
+    // second scan's partitions from 7
+    for ((name, got) <- Seq("coalesce" -> rank.union(cum).coalesce(1),
+                            "union" -> rank.union(cum))) {
+      val rows = got.as[(String, Int, Int, Long)].collect()
+      assert(rows.length === 2 * 997, name)
+      rows.foreach { case (scan, k, u, x) =>
+        assert(x === expect(scan)((k, u)), s"$name $scan ($k,$u)")
+      }
+    }
+  }
+
   private def eventsFixture(rows: Seq[(Long, String, Long, String, Double)]): String = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("edge_ev").toString
