@@ -11,10 +11,9 @@ import org.apache.spark.sql.types._
   * one byte per dimension, stored offset-128-free as the signed byte
   * itself (two's complement: -127..127 fits a Java byte exactly).
   *
-  * This is the REST format of the quantized vector index
-  * ([[graft.pipeline.VectorLake]] banks it): 8 bytes/dim as `array<long>`
-  * becomes 1 byte/dim plus a single offset — the literal 4-8× IO cut the
-  * SQ8 family claims at 100 TB, materialized rather than asserted.
+  * This is the rest format of a quantized vector: 8 bytes/dim as
+  * `array<long>` becomes 1 byte/dim plus a single offset — the 4-8× IO
+  * cut the SQ8 family claims at 100 TB.
   * [[Sq8Dot]] scores the packed form directly, so payloads stay bytes at
   * rest AND in flight; unpacking back to `array<long>` never happens on
   * the query path.

@@ -134,8 +134,7 @@ object Similarity {
     * one 1-row aggregate (the bounded-collect class). EXACT: abs/cast/max
     * do no rounding, so the collected double equals the oracle's
     * CTE-computed double bit for bit. Shared by q213/q214/q215 (in-plan
-    * quantization) and [[graft.pipeline.VectorLake]] (where the scale is
-    * banked with the index and FROZEN on append). */
+    * quantization). */
   def sq8MaxAbs(vecs: DataFrame, vecCol: String = "embedding"): Double = {
     val m = vecs.agg(max(expr(
       s"aggregate($vecCol, CAST(0.0 AS DOUBLE), (a, v) -> greatest(a, abs(CAST(v AS DOUBLE))))")))
@@ -147,10 +146,10 @@ object Similarity {
   /** SQ8 quantizer column: q_i = floor(x_i * 127 / maxabs), CLAMPED to
     * [-127, 127]. The clamp covers two cases with one expression: (a) the
     * double-rounding edge where fl(fl(127·max)/max) lands just past ±127
-    * on a same-corpus scale, and (b) SATURATION under a FROZEN scale —
-    * a VectorLake append whose new vectors exceed the build-time max|x|
-    * must clip (the standard SQ posture), never silently rescale the
-    * banked index. */
+    * on a same-corpus scale, and (b) SATURATION when `maxabs` is smaller
+    * than the data (a scale fixed on other vectors): coordinates clip to
+    * ±127 (the standard SQ posture) rather than leave the range
+    * `sq8_pack` accepts. */
   def sq8Quantize(vec: Column, maxabs: Double): Column =
     transform(vec, v => greatest(lit(-127L), least(lit(127L),
       floor(v.cast("double") * lit(127.0) / lit(maxabs)).cast("long"))))

@@ -1729,9 +1729,9 @@ object SimilarityQueries {
     * ground-truth posture (q22's); in production the quantized vectors
     * drop into the SAME IVF bucketing as q29 - the quantizer composes
     * with the candidate-bounding layer, it does not replace it. The
-    * storage win lands when the lake materializes qv as bytes
-    * (VectorLake's layout seam); in-plan the win this query demonstrates
-    * is integer scoring + the measured recall price of 8 bits. */
+    * storage win lands when qv is stored as bytes (`sq8_pack`); in-plan
+    * the win this query demonstrates is integer scoring + the measured
+    * recall price of 8 bits. */
   /** SQ8 quantizer column over `embedding`: one 1-row max|x| aggregate
     * (the bounded-collect class; exact — abs/cast/max do no rounding)
     * fixes the global symmetric scale, then q_i = floor(x_i * 127 /

@@ -1618,9 +1618,9 @@ object TextQueries {
     // linear only while shingle df is bounded, and a boilerplate-heavy
     // corpus breaks that silently. Auto mode measures the df
     // distribution (one co-partitioned aggregate to a ≤64-row log2
-    // histogram — the VectorLake meanOccupancyPermille pattern: measure
-    // occupancy, compare to a target, then act) and engages the cap ONLY
-    // when Σ df² > F·N (F = spark.graft.dfcap.autofactor, default 64 —
+    // histogram: measure occupancy, compare to a target, then act) and
+    // engages the cap ONLY when Σ df² > F·N (F =
+    // spark.graft.dfcap.autofactor, default 64 —
     // i.e. the mean per-posting join fan-out exceeds F). The engaged cap
     // is the largest power-of-2 band boundary whose kept Σ df² stays
     // within F·N, so the pair stream is bounded by construction; band 0

@@ -56,53 +56,8 @@ object Tables {
         k.stripPrefix(ReadOptionPrefix) -> v
     }
 
-  /** Conf prefix for pre-bucketed layout resolution. When
-    * `spark.graft.bucketed.<table>` names a directory written by
-    * [[graft.tools.BucketedLayout]], that table's reads resolve to an
-    * external BUCKETED catalog table over those files instead of the
-    * plain parquet path — the scan then reports
-    * `HashPartitioning(bucketCol, n)`, so a distinct/aggregate/join
-    * clustered on (a superset of) the bucket column needs NO exchange.
-    * Bucket metadata only exists in a catalog, so the layout is
-    * re-registered per session from the directory's `_bucketspec` file
-    * (idempotent CREATE; the registration binds the LOGICAL table name —
-    * a session that must read the same table from two different sfDirs
-    * must not set the conf). */
-  val BucketedPrefix = "spark.graft.bucketed."
-
-  private def bucketedTable(spark: SparkSession, name: String,
-                            path: String): DataFrame = {
-    val ident = s"graft_bucketed_${name}_${(path.hashCode & 0x7fffffff).toHexString}"
-    if (!spark.catalog.tableExists(ident)) {
-      val p = new org.apache.hadoop.fs.Path(path, "_bucketspec")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(p),
-        s"$BucketedPrefix$name=$path has no _bucketspec file — not a " +
-          "BucketedLayout directory")
-      val props = {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.contains("=")).map { l =>
-            val Array(k, v) = l.split("=", 2); k -> v
-          }.toMap
-        finally in.close()
-      }
-      val schemaDdl = parquet(spark, path).schema.toDDL
-      spark.sql(
-        s"""CREATE TABLE $ident ($schemaDdl) USING parquet
-           |CLUSTERED BY (${props("bucketBy")})
-           |SORTED BY (${props("sortBy")})
-           |INTO ${props("buckets")} BUCKETS
-           |LOCATION '$path'""".stripMargin)
-    }
-    spark.table(ident)
-  }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.conf.getOption(BucketedPrefix + name) match {
-      case Some(path) => bucketedTable(spark, name, path)
-      case None => parquet(spark, tablePath(sfDir, name))
-    }
+    parquet(spark, tablePath(sfDir, name))
 
   /** What schema inference reads for one table: reader options, the
     * parquet-relevant session confs and the table's file listing. */

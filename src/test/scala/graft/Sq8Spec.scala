@@ -22,6 +22,21 @@ class Sq8Spec extends SparkSpec {
     assert(outOfRange === 0L)
   }
 
+  test("sq8Quantize saturates at +-127 when maxabs is below the data, and the result packs") {
+    import spark.implicits._
+    import graft.functions.GraftFunctions
+    import graft.ops.Similarity
+    val xs = Seq(-1e9, -5.0, -2.0, -1.0, 0.0, 1.0, 2.0, 5.0, 1e9)
+    // floor(x * 127 / 2): every |x| >= maxabs = 2 lands on the clamp
+    val expected = Seq(-127L, -127L, -127L, -64L, 0L, 63L, 127L, 127L, 127L)
+    val qv = Similarity.sq8Quantize(typedLit(xs), maxabs = 2.0)
+    val (q, packed) = spark.range(1)
+      .select(qv.as("q"), GraftFunctions.sq8Pack(qv).as("b"))
+      .as[(Seq[Long], Array[Byte])].head()
+    assert(q === expected)
+    assert(packed.toSeq === expected.map(_.toByte))
+  }
+
   test("q213 output: 5 ranks per probe, integer scores in the dot bound, flags consistent") {
     // the emptiness assert below is about THIS query's pins, not whatever
     // an earlier suite left in the shared session
