@@ -10,8 +10,10 @@ library: the engine itself is pure Scala/Spark.
 Usage: ladder_report.py <bench_1x.json> <bench_kx.json> <k> [--cpu-max F]
 
 Each input is the file graft.Bench writes via SPARK_GRAFT_BENCH_OUT: a
-summary line plus a {"detail":"per_query", ...} line with queries/cpu_sec/
-shuffle_write_bytes maps.
+summary line with the queries (name -> wall sec) map plus a
+{"detail":"per_query", ...} line with cpu_sec/shuffle_write_bytes maps.
+Records written before the queries map moved to the summary line carry it
+on the detail line; both are read.
 
 A query is flagged when shuffle bytes grow faster than `k * SHUFFLE_SLACK`
 (shuffle volume should be ~linear in rows for every operator whose plan
@@ -40,6 +42,8 @@ def load(path):
                 summary = d
     if detail is None:
         raise SystemExit(f"{path}: no per_query detail line")
+    if "queries" not in detail:
+        detail["queries"] = summary["queries"]
     return summary, detail
 
 

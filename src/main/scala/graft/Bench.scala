@@ -1,7 +1,6 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -110,14 +109,6 @@ object Bench {
     // a starvation burst is visible instead of silently recorded.
     val runsPerQuery =
       sys.env.get("SPARK_GRAFT_BENCH_RUNS").flatMap(_.toIntOption).getOrElse(2)
-    // gate-test hook: SPARK_GRAFT_BENCH_SLEEP=q01_agg:2000 injects a TIMED
-    // sleep into that query's measurement — the only honest way to
-    // demonstrate the regression gate goes red on a deliberate slowdown
-    // (a fake anchors file would test the comparison, not the pipeline).
-    val sleepInject: Map[String, Long] = sys.env.get("SPARK_GRAFT_BENCH_SLEEP")
-      .map(_.split(",").map(_.trim).filter(_.contains(":")).map { s =>
-        val Array(q, ms) = s.split(":", 2); q -> ms.toLong
-      }.toMap).getOrElse(Map.empty)
     // ladder watchdog: SPARK_GRAFT_BENCH_TIMEOUT=900 caps each query at
     // 900 s — on an unexplored rung one pathological plan must cost its
     // own budget, not the whole run. The query executes in a worker
@@ -143,10 +134,7 @@ object Bench {
         // (token stats, fingerprints, variant extraction, ...) would be
         // timed as bare parquet scans. toRdd runs the plan as the user's
         // query planned it — every output column materialized.
-        def runOnce(): Unit = {
-          fn(spark, sfDir).queryExecution.toRdd.count()
-          sleepInject.get(name).foreach(Thread.sleep)
-        }
+        def runOnce(): Unit = fn(spark, sfDir).queryExecution.toRdd.count()
         ok = try {
           timeoutSec match {
             case None => runOnce()
@@ -214,27 +202,24 @@ object Bench {
       System.err.println(f"[bench] $name%-22s $sec%8.2f s  ${cpuSec}%7.1f cpu-s  ${shBytes / 1024}%9d KiB shuffled  $gcDelta%5d ms gc")
       name -> (sec, shBytes, gcDelta, cpuSec)
     }.toMap
-    val (detailLine, summaryLine) =
+    val lines =
       renderLines(results, runsPerQuery, failed, only.nonEmpty, sfDir, anchorsText)
-    println(detailLine)
-    // first-class repo artifact: the driver's tail parser has recorded
-    // "parsed": null every round, so the headline numbers must also live
-    // in a committed file — summary line first (the parse target), full
-    // per-query detail line second (JSONL).
-    // only a FULL-suite run at the default sf refreshes the committed
-    // summary — a subset or ladder run writes nowhere unless pointed
-    // somewhere explicitly, so it can't clobber the repo's perf record
-    // (a 5-query 2000x subset once replaced the 182-query summary).
+    lines.foreach(println)
+    System.out.flush()
+    // first-class repo artifact: the same lines also live in a committed
+    // file (JSONL). Only a FULL-suite run at the default sf refreshes the
+    // committed summary — a subset or ladder run writes nowhere unless
+    // pointed somewhere explicitly, so it can't clobber the repo's perf
+    // record (a 5-query 2000x subset once replaced the 182-query summary).
     val defaultOut =
       if (only.isEmpty && sfDir == "/root/testdata/sf0.1") "bench_summary.json"
       else ""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     if (outFile.nonEmpty) java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),
-      (summaryLine + "\n" + detailLine + "\n").getBytes("UTF-8"))
-    println(summaryLine)
-    System.out.flush()
+      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     spark.stop()
+    val summaryLine = lines.last
     if (Json.mapper.readTree(summaryLine).path("gate").path("status").asText == "fail" &&
         sys.env.get("SPARK_GRAFT_BENCH_GATE").contains("1")) {
       System.err.println(s"[bench] GATE FAILED: $summaryLine")
@@ -242,13 +227,13 @@ object Bench {
     }
   }
 
-  /** The bench's two output lines (detail JSONL + driver-parsed summary),
-    * as a pure function of the measured results — split from main so
-    * BenchOutputSpec can round-trip BOTH lines through a strict JSON
-    * parser. The r10 breakage was exactly here: a run with >=1 flagged
-    * host-adjusted regression emitted `"k":v` entries inside `[...]`,
-    * invalid JSON that nulled the driver's whole round comparison, and no
-    * test exercised the flagged path. No timing behavior lives in this
+  /** The bench's two output lines in print order — detail, then the
+    * driver-parsed summary LAST — as a pure function of the measured
+    * results, split from main so BenchOutputSpec can round-trip BOTH lines
+    * through a strict JSON parser. The r10 breakage was exactly here: a
+    * run with >=1 flagged host-adjusted regression emitted `"k":v` entries
+    * inside `[...]`, invalid JSON that nulled the driver's whole round
+    * comparison, and no test exercised the flagged path. No timing behavior lives in this
     * function. results: name -> (wall sec | -1 for failed, shuffle bytes,
     * gc ms, executor cpu sec). */
   private[graft] def renderLines(
@@ -257,7 +242,7 @@ object Bench {
       failed: List[String],
       subsetRun: Boolean,
       sfDir: String,
-      anchorsText: Option[String]): (String, String) = {
+      anchorsText: Option[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
     def f3(v: Double): java.math.BigDecimal = Json.dec(v, 3)
     def numbers(kvs: Iterable[(String, java.math.BigDecimal)]): ObjectNode =
@@ -272,18 +257,12 @@ object Bench {
         k.drop(1).takeWhile(_.isDigit).toInt <= 44 => v
     }.sum
     val failedJson = failed.sorted.foldLeft(Json.mapper.createArrayNode())(_.add(_))
-    // The driver's harness captures only the LAST ~2000 characters of the
-    // build output and parses a JSON line found there. A single line holding
-    // four 187-entry name->value maps (~12 KB) gets its head truncated, so
-    // the parse target must be (a) compact and (b) the final line printed.
-    // Yet the round record must carry ALL per-query walls (round-5/6
-    // verdict item), so the summary encodes the full set as a dense array
-    // indexed by query number (the qNNN name prefix, dense 1..N by
-    // convention): queries[i] = wall seconds of query number i+1, trimmed
-    // to 2 decimals, -1 for a failed query, null for an absent number —
-    // ~1 KB for 187 queries, inside the window with margin. The full
-    // name->seconds map (plus cpu/shuffle/gc) goes on a "detail" line
-    // first and into bench_summary.json.
+    // The driver parses the LAST line printed, in full (r10's PERF read a
+    // name -> sec map off the ~12 KB detail line), and compares rounds by
+    // query name. So the summary line, printed last, carries the full
+    // name -> wall-seconds map as `queries` (-1 for a failed query); the
+    // detail line carries the other per-query maps (cpu/shuffle/gc/
+    // adjusted ratio), so no map is printed twice.
     // regression gate: BASELINE.md's anchors as an ENFORCED contract, not
     // documentation. bench_anchors.json (committed) records the expected
     // q01-q44 subtotal and grand total for this host profile; a full run
@@ -356,54 +335,33 @@ object Bench {
       .map { case (k, r) => k -> f3(r) })
     val detailLine = Json.mapper.writeValueAsString(Json.obj()
       .put("detail", "per_query")
-      .set[ObjectNode]("queries", numbers(rs.map { case (k, r) => k -> f3(r._1) }))
       .set[ObjectNode]("cpu_sec", numbers(rs.map { case (k, r) => k -> f3(r._4) }))
       .set[ObjectNode]("shuffle_write_bytes",
         numbers(rs.map { case (k, r) => k -> java.math.BigDecimal.valueOf(r._2) }))
       .set[ObjectNode]("gc_ms",
         numbers(rs.map { case (k, r) => k -> java.math.BigDecimal.valueOf(r._3) }))
       .set[ObjectNode]("anchor_adj_ratio", adjJson))
-    // 2-decimal, trailing zeros trimmed: array density is what buys the
-    // full 187-wall record its place inside the capture window
-    val byNum = results.map { case (k, (v, _, _, _)) =>
-      k.drop(1).takeWhile(_.isDigit).toInt -> v }
-    val qArr = (1 to byNum.keys.maxOption.getOrElse(0))
-      .foldLeft(Json.mapper.createArrayNode()) { (a, i) =>
-        byNum.get(i).fold(a.addNull())(v => a.add(Json.dec(v, 2).stripTrailingZeros))
-      }
     val topQs = numbers(rs.filter(_._2._1 >= 0).sortBy(-_._2._1).take(5)
       .map { case (k, (v, _, _, _)) => k -> f3(v) })
-    def summaryWith(queries: JsonNode, key: String): String = {
-      val s = Json.obj()
-        .put("metric", "total")
-        .put("value", f3(total))
-        .put("unit", "sec")
-        .put("n_queries", results.size)
-        .put("runs_per_query", runsPerQuery)
-        .put("total_q01_q44", f3(r1Total))
-      // host calibration, surfaced mechanically (not as a prose footnote):
-      // the q01-q44 anchor ratio of THIS run — cross-round comparisons in
-      // BASELINE.md divide walls by it so host spread (measured up to 1.35x
-      // between same-day runs of identical code) never reads as regression
-      runHost.foreach(h => s.put("host_factor", h))
-      Json.mapper.writeValueAsString(s
-        .set[ObjectNode]("queries", queries)
-        .put("queries_key", key)
-        .set[ObjectNode]("slowest", topQs)
-        .set[ObjectNode]("host_adj_regressions", regressionsJson)
-        .set[ObjectNode]("failed", failedJson)
-        .set[ObjectNode]("gate", gate)
-        .put("sf", sfDir))
-    }
-    val fullLine = summaryWith(qArr,
-      "queries[i]=wall sec of query number i+1 (qNNN name prefix); -1=failed; full name->sec map on the detail line and bench_summary.json")
-    // degrade rather than overflow: a summary whose head the driver's
-    // ~2000-char window would truncate parses as nothing at all, which is
-    // strictly worse than a slowest-only map (never expected at <=400
-    // queries; the array is ~5.5 bytes/query)
-    val summaryLine =
-      if (fullLine.length <= 1900) fullLine
-      else summaryWith(topQs, "full array dropped: it would overflow the driver capture window; see detail line")
-    (detailLine, summaryLine)
+    val summary = Json.obj()
+      .put("metric", "total")
+      .put("value", f3(total))
+      .put("unit", "sec")
+      .put("n_queries", results.size)
+      .put("runs_per_query", runsPerQuery)
+      .put("total_q01_q44", f3(r1Total))
+    // host calibration, surfaced mechanically (not as a prose footnote):
+    // the q01-q44 anchor ratio of THIS run — cross-round comparisons in
+    // BASELINE.md divide walls by it so host spread (measured up to 1.35x
+    // between same-day runs of identical code) never reads as regression
+    runHost.foreach(h => summary.put("host_factor", h))
+    val summaryLine = Json.mapper.writeValueAsString(summary
+      .set[ObjectNode]("queries", numbers(rs.map { case (k, r) => k -> f3(r._1) }))
+      .set[ObjectNode]("slowest", topQs)
+      .set[ObjectNode]("host_adj_regressions", regressionsJson)
+      .set[ObjectNode]("failed", failedJson)
+      .set[ObjectNode]("gate", gate)
+      .put("sf", sfDir))
+    Seq(detailLine, summaryLine)
   }
 }

@@ -59,9 +59,9 @@ object GraftSession {
   }
 
   /** The ladder hook: SPARK_GRAFT_CONF="spark.graft.dedup.digestHex=16,
-    * spark.graft.retrieval.queryCap=500" sets session confs before a run —
+    * spark.graft.audit.sampleDenom=10" sets session confs before a run —
     * how the scale ladder measures the conf-gated 100-TB paths (digest
-    * truncation, bounded query set) under bench discipline, and how Verify
+    * truncation, sampled audit) under bench discipline, and how Verify
     * checks identity under the same confs. Only spark.graft.* keys. */
   def confOverrides(raw: String): Seq[(String, String)] =
     raw.split(",").toSeq.map(_.trim).filter(_.contains("=")).map { kv =>

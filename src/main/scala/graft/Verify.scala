@@ -14,9 +14,8 @@ object Verify {
     // the oracle SQL is built for the defaults, so running the compare
     // with e.g. sampleDenom=10 produces a guaranteed hash mismatch that
     // would read as a correctness failure instead of a config conflict.
-    // (Confs with spec-pinned OUTPUT IDENTITY — dedup.digestHex,
-    // approx.percentile at fixture scale — are deliberately allowed:
-    // a green compare under them is evidence, not noise.)
+    // (dedup.digestHex, whose OUTPUT IDENTITY specs pin, is deliberately
+    // allowed: a green compare under it is evidence, not noise.)
     Seq("spark.graft.audit.sampleDenom" -> TextQueries.sampleDenom.toString
     ).foreach { case (k, dflt) =>
       spark.conf.getOption(k).filter(_ != dflt).foreach { v =>

@@ -176,8 +176,8 @@ object Dedup {
     * batch rows with unseen keys, bit-identical to the plain anti-join
     * (spec-pinned), while the lake-proportional key shuffle that the
     * plain form pays per increment never happens. `expectedItems` sizes
-    * the bloom (`spark.graft.dedup.bloomItems` at call sites); a
-    * too-small bloom degrades to more verify traffic, not wrong rows. */
+    * the bloom (q201 passes a fixed 1 000 000); a too-small bloom
+    * degrades to more verify traffic, not wrong rows. */
   def bloomGatedNewKeys(lakeKeys: DataFrame, batch: DataFrame,
                         keyCol: String, expectedItems: Long): DataFrame = {
     val bloom = graft.functions.BloomFilters

@@ -295,24 +295,11 @@ object CoreQueries {
     * shuffle for the edges, one for the (lang, bin) counts, no sort of the
     * full table. Bin membership compares n_chars against the UNROUNDED
     * interpolated edges on both engines (rounding only in the output
-    * projection), so boundary docs land identically.
-    *
-    * THE 100 TB PATH IS EXECUTABLE, not prose: setting the session conf
-    * `spark.graft.approx.percentile=true` swaps the edge aggregate to
-    * `approx_percentile` (KLL-style bounded-memory sketch) with the SAME
-    * downstream plan — edges broadcast back onto the scan, narrow bin
-    * map, count agg. Exact `percentile` buffers every value per group
-    * and is the right call up to memory; the sketch caps the buffer at
-    * the accuracy parameter (1e4 here → exact below 10k rows/group,
-    * rank error ≤ n/accuracy above). Q72ApproxSpec asserts the swap
-    * keeps schema + plan shape and, at spec scale, the exact values.
-    * The exact form stays the oracle-checked default. */
+    * projection), so boundary docs land identically. Exact `percentile`
+    * buffers every value per group: the right call while a group fits in
+    * memory. */
   def q72EquidepthHist(spark: SparkSession, dir: String): DataFrame = {
-    val approx =
-      spark.conf.getOption("spark.graft.approx.percentile").contains("true")
-    def pct(q: String): Column =
-      if (approx) expr(s"CAST(approx_percentile(n_chars, ${q}D, 10000) AS DOUBLE)")
-      else expr(s"percentile(n_chars, ${q}D)")
+    def pct(q: String): Column = expr(s"percentile(n_chars, ${q}D)")
     val docs = Tables.documents(spark, dir).select(col("lang"), col("n_chars"))
     val edges = docs.groupBy("lang").agg(
       pct("0.25").as("q1"),

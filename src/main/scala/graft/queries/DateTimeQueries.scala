@@ -298,20 +298,9 @@ object DateTimeQueries {
     * per-type stat frames broadcast back onto the event stream, so the
     * scan stays narrow. 1.4826·MAD rescales to σ-equivalents under
     * normality (the standard public constant); nullif guards MAD = 0
-    * (NULL rz rows filter out rather than dividing to Infinity). The
-    * 100 TB swap is EXECUTABLE: the same session conf as q72
-    * (`spark.graft.approx.percentile=true`) turns both medians into
-    * approx_percentile sketches with the identical plan shape (stat
-    * frames broadcast back, scan stays narrow) — exact below the 10k
-    * accuracy buffer per group, rank error ≤ n/1e4 above, exact stays
-    * the oracle-checked default (the ApproxPathsSpec/Q72ApproxSpec
-    * pattern). */
+    * (NULL rz rows filter out rather than dividing to Infinity). */
   def q68RobustOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val approx =
-      spark.conf.getOption("spark.graft.approx.percentile").contains("true")
-    def median(c: String): Column =
-      if (approx) expr(s"CAST(approx_percentile($c, 0.5D, 10000) AS DOUBLE)")
-      else expr(s"percentile($c, 0.5D)")
+    def median(c: String): Column = expr(s"percentile($c, 0.5D)")
     val ev = Tables.events(spark, dir)
     val med = ev.groupBy(col("event_type"))
       .agg(median("value").as("med"))

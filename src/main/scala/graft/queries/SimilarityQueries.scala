@@ -978,11 +978,7 @@ object SimilarityQueries {
     * candidates); fusion adds one (qid, doc_id) full-outer join over two
     * ≤10-row-per-query frames and a qid-partitioned window — negligible
     * at any corpus size. A doc surfaced by only one arm gets that arm's
-    * term alone (standard RRF semantics; its other rank emits NULL).
-    * `spark.graft.retrieval.queryCap = K` bounds BOTH arms to the K
-    * smallest query ids (see [[TextQueries.retrievalQueryCap]]) — the
-    * fixture's proportional query slice is a ladder artifact; the cap is
-    * how the ladder measures corpus growth at fixed workload. */
+    * term alone (standard RRF semantics; its other rank emits NULL). */
   def q181HybridRrf(spark: SparkSession, dir: String): DataFrame = {
     val wLex = Window.partitionBy(col("qid"))
       .orderBy(col("score_micro").desc, col("doc_id").asc)
@@ -991,23 +987,15 @@ object SimilarityQueries {
       .where(col("lex_rank") <= 10)
       .select(col("qid"), col("doc_id"), col("lex_rank"))
     val emb = Tables.embeddings(spark, dir)
-    // the semantic arm's query cap rides the id-aligned embeddings table
-    // (documents and embeddings share the id domain, so both arms keep
-    // the SAME K queries)
-    val capIds = TextQueries.retrievalQueryCap(spark).map(k =>
-      emb.select(col("vec_id").as("qid")).where(col("qid") % 100 === 0)
-        .orderBy(col("qid")).limit(k))
-    def capped(df: DataFrame): DataFrame =
-      capIds.fold(df)(ids => df.join(broadcast(ids), Seq("qid"), "left_semi"))
     val banded = bandedOf(emb, pnOf(spark, dir))
-    val qb = capped(banded.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("qid"), col("tbl"), col("bucket")))
+    val qb = banded.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("qid"), col("tbl"), col("bucket"))
     val cand = banded.filter(col("vec_id") % 100 =!= 0)
       .join(broadcast(qb), Seq("tbl", "bucket"))
       .select(col("qid"), col("vec_id").as("doc_id"))
       .distinct()
-    val q = capped(emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe")))
+    val q = emb.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val cos = Similarity.cosine(col("qe"), col("embedding"))
     val wSem = Window.partitionBy(col("qid"))
       .orderBy(col("cs").desc, col("doc_id").asc)

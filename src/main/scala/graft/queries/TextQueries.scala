@@ -748,24 +748,9 @@ object TextQueries {
         sum(col("bytes_saved")).as("bytes_saved"))
   }
 
-  /** Number of BPE merge steps q71 trains by default (oracle SQL is
-    * generated for the same constant, so the two sides can't drift). */
+  /** Number of BPE merge steps q71 trains (oracle SQL is generated for
+    * the same constant, so the two sides can't drift). */
   private val bpeSteps = 8
-
-  /** `spark.graft.bpe.steps` overrides the trained merge count — the
-    * ladder knob for measuring that per-step cost is flat in the step
-    * count (each step touches only the persisted word-count vocab) and
-    * linear in vocab size. The ORACLE stays generated for the default:
-    * the conf is for scale runs, and because merges are trained
-    * sequentially, a k-step run's output is exactly the first k rows of
-    * any longer run's (OpsEdgeSpec pins the prefix property). */
-  private def bpeStepsOf(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.bpe.steps").map { s =>
-      val n = s.toInt
-      require(n >= 1 && n <= 256,
-        s"spark.graft.bpe.steps must be in [1, 256], got $s")
-      n
-    }.getOrElse(bpeSteps)
 
   /** q71: BPE tokenizer-training merges — the vocabulary-building loop of a
     * byte-pair-encoding tokenizer, run as `bpeSteps` iterations of "count
@@ -795,7 +780,7 @@ object TextQueries {
     * Regime bound (r7 ladder, BASELINE.md): per-step cost is flat in the
     * step count and the job-scheduling constant is ~0.1–0.2 s/step, so
     * the distributed loop is the right tool while steps × constant ≪ the
-    * corpus pass — true for the conf's whole [1, 256] range. A
+    * corpus pass — true at the 8–32 steps the ladder measured. A
     * production 32k-merge vocabulary is a different regime: there you
     * collect the (word, count) table once (vocab-sized, Heaps-bounded)
     * and run the remaining 30k+ argmax/merge steps driver-resident over
@@ -815,8 +800,7 @@ object TextQueries {
       val merges = Seq.newBuilder[(Int, String, String, String, Long)]
       var step = 1
       var exhausted = false
-      val steps = bpeStepsOf(spark)
-      while (step <= steps && !exhausted) {
+      while (step <= bpeSteps && !exhausted) {
         val pairs = graft.functions.WordShingles(split(trim(col("seq")), " "), 2)
         val top = cur
           .select(col("w"), explode(pairs).as("pair"))
@@ -992,37 +976,18 @@ object TextQueries {
     * whole vocabulary fits. Determinism: ln(p) is quantized to integer
     * micro-nats with floor() BEFORE the per-doc sum, so the aggregate is
     * exact integer arithmetic, independent of partition order; doubles
-    * appear only in the final one-division projection.
-    *
-    * THE 100 TB PATH IS EXECUTABLE: session conf
-    * `spark.graft.approx.vocab.k = K` swaps the full-vocabulary model
-    * for the top-K vocabulary (count desc, token asc — a total order,
-    * planned as TakeOrderedAndProject: per-partition top-K + driver
-    * merge, no global sort) with an OOV floor of "count 0.5" for
-    * out-of-vocab tokens — the CCNet-style bounded model. The plan
-    * shape is IDENTICAL (model broadcast onto the token stream); only
-    * the model's row bound changes, which is what makes it broadcastable
-    * when the true vocabulary is billions of rows. ApproxPathsSpec pins
-    * the contract: K ≥ |vocab| reproduces the exact output bit for bit,
-    * small K keeps the broadcast shape and only ever LOWERS a doc's
-    * score (the floor is strictly below every real token's logprob).
-    * Exact stays the oracle-checked default. */
+    * appear only in the final one-division projection. Every token is in
+    * the model, so the join is the inner join the oracle mirrors. */
   def q89UnigramLogprob(spark: SparkSession, dir: String): DataFrame = {
-    val approxK = spark.conf.getOption("spark.graft.approx.vocab.k").map(_.toInt)
     val tok = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(TA.tokens(col("text"))).as("token"))
-    val full = tok.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val model = approxK.fold(full)(k =>
-      full.orderBy(col("cnt").desc, col("token").asc).limit(k))
+    val model = tok.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = tok.agg(count(lit(1)).as("n_total"))
-    // left join + OOV floor: in exact mode every token is in the model,
-    // so cnt is never NULL and the values are identical to the plain
-    // inner-join form the oracle mirrors
-    tok.join(broadcast(model), Seq("token"), "left")
+    tok.join(broadcast(model), Seq("token"))
       .crossJoin(broadcast(total))
       .select(col("doc_id"),
-        floor(log(coalesce(col("cnt").cast("double"), lit(0.5))
-            / col("n_total").cast("double")) * lit(1e6))
+        floor(log(col("cnt").cast("double") / col("n_total").cast("double"))
+            * lit(1e6))
           .cast("long").as("lp_q"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("lp_q")).as("s"))
@@ -1522,12 +1487,6 @@ object TextQueries {
       .select(col("doc_id"), array_sort(array_distinct(col("sh"))).as("s"))
       .filter(size(col("s")) > 0)
 
-  /** `dfcap=auto`'s log2 band of a positive df, floor(log2(df)), computed
-    * in integer space as `bit length - 1`: a floating-point
-    * `floor(log(2, df))` rounds near powers of two (Long.MaxValue lands in
-    * band 63). */
-  private[graft] def dfBand(df: Column): Column = (length(bin(df)) - 1).cast("int")
-
   /** q126 core over a caller-managed (persisted) sorted-shingle frame.
     *
     * Formulation: exact set-similarity join by COUNTING CO-OCCURRENCES in
@@ -1554,23 +1513,8 @@ object TextQueries {
     * is bounded, the normal case for 3-shingle dedup corpora. At a
     * boilerplate-heavy corpus where some df explodes (Σ df² ≫ N), the
     * classic mitigation is dropping stop-shingles above a df cap from
-    * the index (Henzinger'06) — and that path is EXECUTABLE here:
-    * session conf `spark.graft.dfcap = C` filters the posting index to
-    * shingles with df ≤ C before the self-join (the df aggregate and
-    * the semi-join both reuse the posting stream's g-partitioning — no
-    * extra exchange). Capping only DROPS intersections: n1/n2 stay the
-    * full set sizes, so J is underestimated for pairs containing a
-    * stop-shingle and the output is a subset of the exact answer —
-    * recall trades against the Σ df² bound, never precision.
-    * `spark.graft.dfcap = auto` measures the trigger instead of trusting
-    * the operator to know the corpus: a ≤64-row log2 df histogram decides
-    * whether Σ df² exceeds `spark.graft.dfcap.autofactor` (default 64) ×
-    * N and, when it does, derives the widest power-of-2 cap that holds
-    * the pair stream inside that budget.
-    * ApproxPathsSpec pins the contract (cap ≥ max df reproduces the exact
-    * output; any cap yields a subset with per-pair J ≤ exact; auto is
-    * byte-identical on a non-skewed corpus and binds on a synthetic
-    * df-exploded one). Exact stays the oracle-checked default.
+    * the index (Henzinger'06). That cap trades recall for the Σ df²
+    * bound; no workload here needs it, so the join stays exact.
     *
     * Evaluated and REJECTED (r6): reinstating PPJoin prefix filtering on
     * TOP of the counting join (index only each doc's df-ascending prefix,
@@ -1580,9 +1524,7 @@ object TextQueries {
     * structure): Σ df_prefix² is only 2.9× below Σ df² (430k vs 1.27M
     * pair-rows at sf0.1), and the prefix path adds a df join on every
     * posting row, a per-doc ranking pass, and a second full-posting
-    * verify join — more than the 2.9× buys. The df-cap conf above
-    * remains the documented escape hatch for genuinely df-exploded
-    * corpora. */
+    * verify join — more than the 2.9× buys. */
   /** PRECONDITION: `docs` must be persisted by the caller — this method
     * calls `docs.count()` eagerly at plan-construction time to size the
     * shuffle width, and an unpersisted frame would silently run the full
@@ -1606,62 +1548,9 @@ object TextQueries {
     // adds no further exchange.
     val width = math.max(spark.sparkContext.defaultParallelism,
       (docs.count() / 2000L).toInt)
-    val post0 = docs.select(col("doc_id"), size(col("s")).cast("long").as("n"),
+    val post = docs.select(col("doc_id"), size(col("s")).cast("long").as("n"),
       explode(col("s")).as("g"))
       .repartition(width, col("g"))
-    // optional Henzinger stop-shingle cap (see Scaladoc): the df agg and
-    // the semi-join probe are both clustered by g already, so the filter
-    // costs one co-partitioned pass, no new exchange.
-    //
-    // `spark.graft.dfcap = auto` (r11, guide §2.5) is the MEASURED
-    // trigger the manual integer lacked: the pair stream is Σ df² rows,
-    // linear only while shingle df is bounded, and a boilerplate-heavy
-    // corpus breaks that silently. Auto mode measures the df
-    // distribution (one co-partitioned aggregate to a ≤64-row log2
-    // histogram: measure occupancy, compare to a target, then act) and
-    // engages the cap ONLY when Σ df² > F·N (F =
-    // spark.graft.dfcap.autofactor, default 64 —
-    // i.e. the mean per-posting join fan-out exceeds F). The engaged cap
-    // is the largest power-of-2 band boundary whose kept Σ df² stays
-    // within F·N, so the pair stream is bounded by construction; band 0
-    // (df = 1, Σ df² ≤ N) always fits, so the cap is never vacuous.
-    // Same subset-only contract as the manual cap (ApproxPathsSpec);
-    // exact stays the oracle-checked default — a fixture-shaped corpus
-    // measures far below the trigger and runs the byte-identical exact
-    // plan.
-    val post = spark.conf.getOption("spark.graft.dfcap")
-      .fold(post0) {
-        case "auto" =>
-          val dfF = post0.groupBy(col("g")).agg(count(lit(1)).as("df"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val bands = dfF
-            .groupBy(dfBand(col("df")).as("band"))
-            .agg(sum(col("df")).as("n_b"),
-              sum(col("df") * col("df")).as("s2_b"))
-            .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-            .sortBy(_._1)
-          val n = bands.map(_._2).sum
-          val s2 = bands.map(_._3).sum
-          val factor = spark.conf.getOption("spark.graft.dfcap.autofactor")
-            .map(_.toLong).getOrElse(64L)
-          require(factor >= 1, s"spark.graft.dfcap.autofactor must be >= 1")
-          if (s2 <= factor * n) { dfF.unpersist(); post0 }
-          else {
-            val budget = factor * n
-            val lastBand = bands.scanLeft((Int.MinValue, 0L)) {
-              case ((_, acc), (b, _, s2b)) => (b, acc + s2b)
-            }.tail.takeWhile(_._2 <= budget).map(_._1).lastOption
-              .getOrElse(0)
-            val cap = (1L << (lastBand + 1)) - 1L
-            val keep = dfF.filter(col("df") <= cap).select("g")
-            post0.join(keep, Seq("g"), "left_semi")
-          }
-        case capStr =>
-          val cap = capStr.toLong
-          val keep = post0.groupBy(col("g")).agg(count(lit(1)).as("df"))
-            .filter(col("df") <= cap).select("g")
-          post0.join(keep, Seq("g"), "left_semi")
-      }
     // SHUFFLE_HASH, not sort-merge: both sides are the same exploded
     // posting stream — hash-partitioning is unavoidable but SORTING 10s of
     // millions of 20-char shingle keys is pure overhead for an equi-join
@@ -2161,28 +2050,10 @@ object TextQueries {
       .select(col("qid"), col("rank"), col("doc_id"), col("score_micro"))
   }
 
-  /** The fixture's query slice (id % 100 == 0) GROWS with the corpus — a
-    * ladder artifact: real retrieval workloads are a bounded query set
-    * over a growing collection. `spark.graft.retrieval.queryCap = K`
-    * restricts both retrieval arms (q179's lexical, q181's lexical AND
-    * semantic) to the K SMALLEST query ids — deterministic, and a pure
-    * workload restriction: corpus-side statistics (tf/df/dl/N) are
-    * computed before the cap joins in, so capped output == uncapped
-    * output filtered to the kept qids (pinned by ApproxPathsSpec). The
-    * id list is a TakeOrderedAndProject over the query slice (K bounded)
-    * broadcast-semi-joined onto the arm. */
-  private[queries] def retrievalQueryCap(spark: SparkSession): Option[Int] = {
-    val cap = spark.conf.getOption("spark.graft.retrieval.queryCap").map(_.toInt)
-    cap.foreach(k => require(k >= 1,
-      s"spark.graft.retrieval.queryCap must be >= 1, got $k"))
-    cap
-  }
-
   /** The BM25 scored frame (qid, doc_id, score_micro) shared by q179
     * (which ranks it top-3) and q181's hybrid fusion (which fuses its
     * top-10 with the semantic arm). See [[q179Bm25]] for the full
-    * scoring/exactness/scale contract and [[retrievalQueryCap]] for the
-    * bounded-workload knob. */
+    * scoring/exactness/scale contract. */
   private[queries] def bm25Scored(spark: SparkSession, dir: String): DataFrame = {
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), TA.tokens(col("text")).as("toks"))
@@ -2212,14 +2083,8 @@ object TextQueries {
     val sizes = corpusTf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val totals = corpusTf.agg(
       count_distinct(col("doc_id")).as("nd"), sum(col("tf")).as("tot"))
-    val qGramsAll = grams.where(col("doc_id") % 100 === 0)
+    val qGrams = grams.where(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("qid"), col("gram")).distinct()
-    val qGrams = retrievalQueryCap(spark).fold(qGramsAll) { k =>
-      val ids = Tables.documents(spark, dir)
-        .select(col("doc_id").as("qid")).where(col("qid") % 100 === 0)
-        .orderBy(col("qid")).limit(k)
-      qGramsAll.join(broadcast(ids), Seq("qid"), "left_semi")
-    }
     val contrib = corpusTf
       .join(broadcast(qGrams), Seq("gram"))
       .join(df, Seq("gram"))
@@ -2268,10 +2133,6 @@ object TextQueries {
     * ever cross the wire — the text itself never shuffles. */
   def q183DsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val nBuckets = 256
-    // which source plays "curated target" is a WORKLOAD parameter, not an
-    // algorithm change — conf-gated like retrieval.queryCap; the oracle
-    // checks the src0 default
-    val target = spark.conf.getOption("spark.graft.dsir.target").getOrElse("src0")
     val db = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), explode(TA.tokens(col("text"))).as("tok"))
       .select(col("doc_id"), col("source"),
@@ -2279,7 +2140,7 @@ object TextQueries {
       .groupBy(col("doc_id"), col("source"), col("b"))
       .agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val isTarget = col("source") === target
+    val isTarget = col("source") === "src0"
     val m = db.groupBy(col("b"))
       .agg(sum(when(isTarget, col("c")).otherwise(0L)).as("ct"),
         sum(when(isTarget, 0L).otherwise(col("c"))).as("cr"))
@@ -2722,15 +2583,12 @@ object TextQueries {
     * is the plain anti-join — grouped to one surviving row per new key
     * (q18's contract: min doc_id + within-batch dup count). */
   def q201BloomDedup(spark: SparkSession, dir: String): DataFrame = {
-    val expectedItems =
-      spark.conf.getOption("spark.graft.dedup.bloomItems")
-        .map(_.toLong).getOrElse(1000000L)
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), Dedup.normKey(col("text")).as("dedup_key"))
     val lakeKeys = keyed.filter(col("doc_id") % 10 =!= 7)
       .select(col("dedup_key"))
     val batch = keyed.filter(col("doc_id") % 10 === 7)
-    Dedup.bloomGatedNewKeys(lakeKeys, batch, "dedup_key", expectedItems)
+    Dedup.bloomGatedNewKeys(lakeKeys, batch, "dedup_key", 1000000L)
       .groupBy(col("dedup_key"))
       .agg(min(col("doc_id")).as("kept_doc_id"),
         count(lit(1)).as("dup_count"))
@@ -2985,15 +2843,9 @@ object TextQueries {
     // fp-rate × corpus windows of verify shuffle (measured: the 1M
     // default at the 1000× rung's 5.65M eval digests left 3.7 GB of fp
     // traffic). The eager count is one metadata-cheap job over the 1%
-    // eval slice (the q126 posture: count before sizing); the conf
-    // overrides it for a persisted-bloom deployment where the build-time
-    // size is already known — and for PLAN-ONLY contexts (explain
-    // tooling builds this DataFrame through SparkEntry.queries; setting
-    // spark.graft.dedup.bloomItems skips the eager sizing job).
-    val expectedItems =
-      spark.conf.getOption("spark.graft.dedup.bloomItems")
-        .map(_.toLong).getOrElse(math.max(bench.count(), 1000L))
-    val bloom = graft.functions.BloomFilters.bloomOf(bench, "h", expectedItems)
+    // eval slice (the q126 posture: count before sizing).
+    val bloom = graft.functions.BloomFilters.bloomOf(bench, "h",
+      math.max(bench.count(), 1000L))
     val cuts = wins(toks.where(col("doc_id") % 100 =!= 0))
       .where(graft.functions.BloomFilters.mightContain(
         bloom.scalar(), col("h")))
@@ -3028,10 +2880,9 @@ object TextQueries {
     * per source at the end. No window anywhere: prefix sums and the
     * violation screen run on the ≤|sources|²-row broadcast cross (the
     * q204/q207 bounded-matrix posture), so the plan holds at any corpus
-    * size — the corpus appears only in the one token-count agg.
-    * `spark.graft.mix.budgetTokens` overrides the default B = total/2;
-    * B ≥ total degenerates to every source fully granted. Zero-token
-    * sources emit no row (they can neither receive nor cap). */
+    * size — the corpus appears only in the one token-count agg. The
+    * budget is B = total/2. Zero-token sources emit no row (they can
+    * neither receive nor cap). */
   def q209BudgetFill(spark: SparkSession, dir: String): DataFrame = {
     val counts = Tables.documents(spark, dir)
       .select(col("source"), size(TA.tokens(col("text"))).cast("long").as("nt"))
@@ -3043,8 +2894,7 @@ object TextQueries {
         floor(lit(1000000.0d) * sqrt(col("c").cast("double") /
           nullif(col("c_max"), lit(0L)).cast("double"))).cast("long"))
       .select(col("source"), col("c"), col("wm"), col("t_total"))
-    val budget = spark.conf.getOption("spark.graft.mix.budgetTokens")
-      .map(v => lit(v.toLong)).getOrElse(expr("t_total DIV 2"))
+    val budget = expr("t_total DIV 2")
     val probe = broadcast(w.select(col("source").as("src_j"),
       col("c").as("c_j"), col("wm").as("wm_j")))
     // exact order key: j before-or-equal i ⟺ c_j/wm_j < c/wm (cross-

@@ -18,6 +18,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(e.getMessage.contains("spark.sql.shuffle.partitions"))
   }
 
+  test("main code reads exactly the three spark.graft.* confs") {
+    // every "spark.graft.<key>" string in code (comments skipped): a new
+    // query conf doubles the plans Verify and the specs must cover, so
+    // adding one means adding it here on purpose
+    import scala.jdk.CollectionConverters._
+    val key = "\"spark\\.graft\\.([A-Za-z0-9_.]+)".r
+    val files = scala.util.Using.resource(
+      java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    val keys = files.flatMap(f => java.nio.file.Files.readAllLines(f).asScala)
+      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/") }
+      .flatMap(l => key.findAllMatchIn(l).map(_.group(1)))
+      .toSet
+    assert(keys === Set("dedup.digestHex", "audit.sampleDenom", "read.option."))
+  }
+
   test("a started session reports the shared settings") {
     assert(spark.sparkContext.master === "local[4, 2]")
     // a fresh session of the same context carries the builder's settings,
