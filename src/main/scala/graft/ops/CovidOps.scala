@@ -22,7 +22,8 @@ object CovidOps {
 
   /** P6: increment selection — one logical date per run
     * (`WHERE date_of_data = ds`, reference `spark_transform_data.py:24`).
-    * At scale this is partition pruning on a date-partitioned table. */
+    * At scale this is partition pruning on a date-partitioned table; the
+    * covid connector answers it itself, so no Filter stays above its scan. */
   def forDate(ds: String)(stage: DataFrame): DataFrame =
     stage.filter(col("date_of_data") === to_date(lit(ds)))
 

@@ -54,14 +54,17 @@ object Mart {
     *
     * The window has no partition: the batch is ranked in one task, which
     * is the dim's own single-partition window (a date is hundreds of
-    * rows). For keys against a dim built elsewhere (seeded, upserted),
-    * use [[withSurrogateKeys]]. */
+    * rows). The input is read through `coalesce(1)`, whose single
+    * partition meets the window's requirement with no exchange, so the
+    * rows are produced, ranked and consumed in that one task; an input
+    * of several partitions is computed in it too. For keys against a dim
+    * built elsewhere (seeded, upserted), use [[withSurrogateKeys]]. */
   def rankKeyedFact(flat: DataFrame): DataFrame = {
     val country = col("country_name")
     val region = col("region_name")
     val regionKey = when(country.isNotNull && region.isNotNull,
       dense_rank().over(Window.orderBy(country, region)))
-    flat.select(measures ++ Seq(
+    flat.coalesce(1).select(measures ++ Seq(
       Dims.dateKey(col("day_of_data")).as("date_key"),
       regionKey.cast("int").as("region_key")): _*)
   }

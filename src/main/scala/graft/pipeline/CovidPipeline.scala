@@ -93,8 +93,14 @@ object CovidPipeline {
     * are never touched, and a date whose gate fails keeps its old files.
     * The date loop is orchestration (Airflow's scheduler role) — the
     * per-date WORK is fully distributed, so driver-side iteration is
-    * correct at any scale. Each date makes one fetch per (date, country),
-    * runs one SQL execution and writes one file; nothing is persisted.
+    * correct at any scale. Each date makes one fetch per (date, country)
+    * and writes one file; nothing is persisted. Over the connector a date
+    * is one SQL execution of one job of ONE task: the scan is one
+    * partition whose reader has the date's fetches in flight together,
+    * the connector answers `forDate`'s predicate, and the rank reads
+    * through `coalesce(1)`, so fetch, parse, rank and write run in one
+    * pipeline with no exchange (and no date literal in generated code:
+    * every date reuses the first date's compiled classes).
     *
     * @param stageFor  per-date stage source (default: the deterministic
     *                  fixture; production: the DSv2 connector for that ds)

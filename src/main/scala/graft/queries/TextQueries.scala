@@ -2939,22 +2939,21 @@ object TextQueries {
       .agg(sum(when(violates, 1L).otherwise(0L)).as("n_viol"))
       .where(col("n_viol") === 0)
       // unique by the math; min-prefix keeps the pick deterministic, and
-      // the struct-min agg yields exactly one row (all-NULL when B ≥
-      // total leaves no candidate — the all-capped CASE below covers it)
+      // the struct-min agg yields exactly one row. B = total DIV 2 over
+      // sources with c > 0 is always below the total, so a valid
+      // candidate exists and no source is capped by the budget alone
       .agg(min(struct(col("cum_c"), col("num"), col("den"))).as("s"))
       .select(coalesce(col("s.num"), lit(0L)).as("num"),
         coalesce(col("s.den"), lit(1L)).as("den"))
     w.crossJoin(broadcast(chosen))
       .select(col("source"), col("c").as("n_tokens"), col("wm").as("weight_micro"),
-        when(budget >= col("t_total"), col("c"))
-          .when(expr("CAST(c AS DECIMAL(38,0)) * den") <=
+        when(expr("CAST(c AS DECIMAL(38,0)) * den") <=
             expr("CAST(num AS DECIMAL(38,0)) * wm"), col("c"))
           .otherwise(expr(
             "CAST((CAST(num AS DECIMAL(38,0)) * wm) DIV den AS BIGINT)"))
           .as("alloc_tokens"),
-        (budget >= col("t_total") ||
-          expr("CAST(c AS DECIMAL(38,0)) * den") <=
-            expr("CAST(num AS DECIMAL(38,0)) * wm")).as("capped"))
+        (expr("CAST(c AS DECIMAL(38,0)) * den") <=
+          expr("CAST(num AS DECIMAL(38,0)) * wm")).as("capped"))
       .select(col("source"), col("n_tokens"), col("weight_micro"),
         col("alloc_tokens"), col("capped"),
         expr("(2 * alloc_tokens * 10000 + n_tokens) DIV (2 * n_tokens)")
@@ -4248,7 +4247,7 @@ object TextQueries {
          |    sqrt(CAST(c AS DOUBLE) / CAST(nullif(c_max, 0) AS DOUBLE)))
          |    AS BIGINT) AS wm, t_total FROM c, m),
          |b AS (SELECT CAST(SUM(wm) AS BIGINT) AS w_total,
-         |  MAX(t_total) AS t_total, MAX(t_total) // 2 AS bud FROM w),
+         |  MAX(t_total) // 2 AS bud FROM w),
          |o AS (SELECT source, c, wm,
          |  SUM(c) OVER ord AS cum_c, SUM(wm) OVER ord AS cum_w
          |  FROM w WINDOW ord AS (
@@ -4271,14 +4270,13 @@ object TextQueries {
          |        AND CAST(j.c AS HUGEINT) * den <= CAST(num AS HUGEINT) * j.wm)),
          |ch AS (SELECT num, den FROM valid ORDER BY cum_c LIMIT 1),
          |fin AS (SELECT w.source, w.c, w.wm,
-         |  CASE WHEN b.bud >= b.t_total THEN w.c
-         |       WHEN CAST(w.c AS HUGEINT) * (SELECT den FROM ch)
+         |  CASE WHEN CAST(w.c AS HUGEINT) * (SELECT den FROM ch)
          |            <= CAST((SELECT num FROM ch) AS HUGEINT) * w.wm THEN w.c
          |       ELSE CAST((CAST((SELECT num FROM ch) AS HUGEINT) * w.wm)
          |            // (SELECT den FROM ch) AS BIGINT) END AS alloc,
-         |  (b.bud >= b.t_total OR CAST(w.c AS HUGEINT) * (SELECT den FROM ch)
+         |  (CAST(w.c AS HUGEINT) * (SELECT den FROM ch)
          |    <= CAST((SELECT num FROM ch) AS HUGEINT) * w.wm) AS capped
-         |  FROM w, b)
+         |  FROM w)
          |SELECT source, c AS n_tokens, wm AS weight_micro,
          |  alloc AS alloc_tokens, capped,
          |  CAST((2 * alloc * 10000 + c) // (2 * c) AS BIGINT) AS fill_bp

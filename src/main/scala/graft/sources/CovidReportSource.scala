@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.time.LocalDate
 import java.util
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Future, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -15,18 +18,25 @@ import graft.pipeline.CovidFixture
 
 /** DataSource V2 connector for the reference's extract stage (SURVEY.md §2.1
   * S1): `spark.read.format("graft.sources.CovidReportSource")` yields the
-  * stage table `(id, date_of_data, iso_country, json_data)` with ONE INPUT
-  * PARTITION PER (date, country) — the connector shape of the reference's
-  * 5-way parallel HTTP fan-out (`dags/ETL_covid19_spark.py:83-88`): each
-  * partition's reader performs "one API call" (here: the deterministic
-  * fixture generator; a production build swaps in an HTTP client per
-  * partition, same classes).
+  * stage table `(id, date_of_data, iso_country, json_data)`, one row per
+  * (date, country) report, in ONE INPUT PARTITION PER SCAN. Its reader
+  * starts every report's "API call" at once on a small pool, so the
+  * reference's 5-way parallel HTTP fan-out (`dags/ETL_covid19_spark.py:
+  * 83-88`) is kept inside one task: a date is 240 rows, and a task (with
+  * the stage boundary a second one brings) per country costs more than the
+  * rows do. The call is the deterministic fixture generator by default; a
+  * production build swaps in an HTTP client, same classes.
   *
-  * Real pushdown, both kinds:
-  *  - partition-level filter pushdown: `iso_country = 'RUS'` / `IN (...)`
-  *    prunes whole partitions — unmatched countries are never "fetched";
+  * Real pushdown, all of it pruning REPORTS before any is fetched:
+  *  - iso filter pushdown: `iso_country = 'RUS'` / `IN (...)` drops the
+  *    unmatched countries' reports;
+  *  - date pushdown: `date_of_data = d` is answered by the connector, so
+  *    Spark applies no Filter above the scan (and a date literal never
+  *    reaches generated code); a `d` other than the `date` option leaves
+  *    no report;
   *  - column pruning: if `json_data` is not in the required schema, the
-  *    reader never builds the payload (the expensive part) at all.
+  *    reader never builds the payload (the expensive part) at all;
+  *  - LIMIT n: only the first n reports are fetched.
   *
   * Options: `date` (yyyy-MM-dd), `provincesPerCountry` (default 48),
   * `payloadProvider` (fully-qualified class name of a
@@ -36,6 +46,9 @@ import graft.pipeline.CovidFixture
   * connector instantiates it per partition reader on the executor — the
   * same class-name-in-config injection JDBC uses for drivers. Everything
   * else (partitioning, pushdown, pruning) is provider-agnostic.
+  *
+  * A failed fetch fails the task with the provider's own exception. A
+  * task retry fetches the whole date again, not just the failed country.
   */
 class CovidReportSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -53,11 +66,13 @@ object CovidReportSource {
     StructField("json_data", StringType, nullable = false)))
 }
 
-/** The per-partition fetch seam (reference behavior:
+/** The per-report fetch seam (reference behavior:
   * `dags/ETL_covid19_pandas.py:33-44` — one HTTP GET per (date, country)).
   * Implementations must be top-level classes with a no-arg constructor;
   * they are instantiated reflectively on the EXECUTOR, once per partition
-  * reader — exactly where a real HTTP client/connection pool would live. */
+  * reader — exactly where a real HTTP client/connection pool would live.
+  * The reader calls `fetch` for a date's reports concurrently, from its
+  * fetch pool's threads, so `fetch` must be thread-safe. */
 trait CovidPayloadProvider extends Serializable {
   /** Return the raw JSON envelope for one (date, country) report. */
   def fetch(ds: String, iso: String, country: String,
@@ -91,14 +106,15 @@ private[sources] class CovidScanBuilder(options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit {
 
+  private val ds = options.getOrDefault("date", "2023-03-02")
   private var required: StructType = CovidReportSource.schema
   private var isoFilter: Option[Set[String]] = None
   private var pushed: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
 
-  /** One row per (date, country) partition, so LIMIT n == first n
-    * partitions: the other countries are never "fetched" at all. Fully
-    * pushed (return true): the scan emits at most `n` rows. */
+  /** One row per report, so LIMIT n == the first n reports: the other
+    * countries are never "fetched" at all. Fully pushed (return true):
+    * the scan emits at most `n` rows. */
   override def pushLimit(n: Int): Boolean = {
     limit = Some(n)
     true
@@ -111,15 +127,24 @@ private[sources] class CovidScanBuilder(options: CaseInsensitiveStringMap)
     val (accepted, rejected) = filters.partition {
       case EqualTo("iso_country", _: String) => true
       case In("iso_country", _) => true
+      // Spark hands a date literal over as either class, per
+      // spark.sql.datetime.java8API.enabled
+      case EqualTo("date_of_data", _: java.sql.Date | _: LocalDate) => true
       case IsNotNull(_) => true // schema is non-nullable: trivially true
       case _ => false
     }
+    def keep(isos: Set[String]): Unit =
+      isoFilter = Some(isoFilter.fold(isos)(_.intersect(isos)))
     accepted.foreach {
-      case EqualTo("iso_country", v: String) =>
-        isoFilter = Some(isoFilter.getOrElse(Set(v)).intersect(Set(v)))
-      case In("iso_country", vs) =>
-        val s = vs.collect { case v: String => v }.toSet
-        isoFilter = Some(isoFilter.map(_.intersect(s)).getOrElse(s))
+      case EqualTo("iso_country", v: String) => keep(Set(v))
+      case In("iso_country", vs) => keep(vs.collect { case v: String => v }.toSet)
+      // every row carries the scan's date: another date matches no report
+      case EqualTo("date_of_data", d) =>
+        val day = d match {
+          case j: java.sql.Date => j.toLocalDate
+          case l: LocalDate => l
+        }
+        if (day != LocalDate.parse(ds)) keep(Set.empty)
       case _ => ()
     }
     pushed = accepted
@@ -132,7 +157,7 @@ private[sources] class CovidScanBuilder(options: CaseInsensitiveStringMap)
     required,
     isoFilter,
     limit,
-    options.getOrDefault("date", "2023-03-02"),
+    ds,
     options.getInt("provincesPerCountry", 48),
     options.getOrDefault("payloadProvider",
       classOf[FixturePayloadProvider].getName),
@@ -156,39 +181,57 @@ private[sources] class CovidScan(required: StructType, isoFilter: Option[Set[Str
     s"CovidReportSource(date=$ds, countries=${isoFilter.getOrElse("ALL")}, " +
       s"columns=${required.fieldNames.mkString(",")})"
 
-  /** One partition per surviving (date, country): the fan-out unit.
-    * A pushed LIMIT keeps only the first n partitions (1 row each). */
+  /** One partition holding every surviving (date, country) report, in
+    * country order; none when no report survives. A pushed LIMIT keeps
+    * only the first n reports (1 row each). */
   override def planInputPartitions(): Array[InputPartition] = {
-    val surviving = CovidFixture.isoCountries.zipWithIndex
-      .filter { case ((iso, _), _) => isoFilter.forall(_.contains(iso)) }
-    limit.fold(surviving)(surviving.take)
-      .map { case ((iso, country), ci) =>
-        CovidInputPartition(ci, iso, country, ds, provinces): InputPartition
-      }.toArray
+    val surviving = CovidFixture.isoCountries.zipWithIndex.collect {
+      case ((iso, country), ci) if isoFilter.forall(_.contains(iso)) =>
+        CovidReport(ci, iso, country)
+    }
+    val reports = limit.fold(surviving)(surviving.take)
+    if (reports.isEmpty) Array.empty
+    else Array(CovidInputPartition(ds, provinces, reports))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CovidReaderFactory(required, providerClass, providerOptions)
 }
 
+private[sources] final case class CovidReport(countryIdx: Int, iso: String, country: String)
+
 private[sources] final case class CovidInputPartition(
-    countryIdx: Int, iso: String, country: String, ds: String,
-    provinces: Int) extends InputPartition
+    ds: String, provinces: Int, reports: Seq[CovidReport]) extends InputPartition
 
 private[sources] class CovidReaderFactory(required: StructType,
                                           providerClass: String,
                                           providerOptions: Map[String, String])
     extends PartitionReaderFactory {
+
+  /** Executor-side fetch pool, a thread per country: a date's fetches are
+    * all in flight together. Its threads are daemons and end after a
+    * second idle, so a pool left behind by a finished task holds nothing. */
+  @transient private lazy val pool: ExecutorService = {
+    val n = CovidFixture.isoCountries.size
+    val p = new ThreadPoolExecutor(n, n, 1, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "covid-report-fetch")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CovidInputPartition]
     new PartitionReader[InternalRow] {
-      private var emitted = false
       // executor-side, once per partition reader — where a real HTTP
       // client (connection pool, auth token) would be initialized.
       // Providers that take configuration (HttpCovidProvider's url/headers)
       // declare a Map[String,String] constructor; stateless ones keep the
       // no-arg form — same class-name injection either way.
-      private lazy val provider: CovidPayloadProvider = {
+      private def provider(): CovidPayloadProvider = {
         val cls = Class.forName(providerClass)
         val inst =
           try cls.getDeclaredConstructor(classOf[Map[String, String]])
@@ -199,21 +242,38 @@ private[sources] class CovidReaderFactory(required: StructType,
           }
         inst.asInstanceOf[CovidPayloadProvider]
       }
-      override def next(): Boolean = if (emitted) false else { emitted = true; true }
+      private val epochDays = LocalDate.parse(p.ds).toEpochDay.toInt
+      // every fetch starts before the first row is read; json_data (the
+      // expensive "API call" payload) is not fetched at all when pruned
+      private val payloads: IndexedSeq[Future[String]] =
+        if (!required.fieldNames.contains("json_data")) IndexedSeq.empty
+        else {
+          val fetcher = provider()
+          p.reports.toIndexedSeq.map(r => pool.submit((() =>
+            fetcher.fetch(p.ds, r.iso, r.country, r.countryIdx, p.provinces)): Callable[String]))
+        }
+      private var i = -1
+
+      override def next(): Boolean = { i += 1; i < p.reports.length }
+
       override def get(): InternalRow = {
-        val epochDays = java.time.LocalDate.parse(p.ds).toEpochDay.toInt
-        // build ONLY the required columns — json_data (the expensive
-        // "API call" payload) is skipped entirely when pruned away
+        val r = p.reports(i)
+        // build ONLY the required columns
         val values = required.fieldNames.map {
-          case "id" => p.countryIdx.toLong
+          case "id" => r.countryIdx.toLong
           case "date_of_data" => epochDays
-          case "iso_country" => UTF8String.fromString(p.iso)
-          case "json_data" => UTF8String.fromString(
-            provider.fetch(p.ds, p.iso, p.country, p.countryIdx, p.provinces))
+          case "iso_country" => UTF8String.fromString(r.iso)
+          case "json_data" => UTF8String.fromString(payload(i))
         }
         new GenericInternalRow(values.asInstanceOf[Array[Any]])
       }
-      override def close(): Unit = ()
+
+      /** The i-th report's payload; a failed fetch rethrows its own cause. */
+      private def payload(i: Int): String =
+        try payloads(i).get()
+        catch { case e: ExecutionException => throw e.getCause }
+
+      override def close(): Unit = payloads.foreach(_.cancel(true))
     }
   }
 }

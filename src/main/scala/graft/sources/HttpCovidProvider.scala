@@ -23,9 +23,11 @@ import java.time.Duration
   * lowercased by Spark's option map, prefix stripped); `header.*` entries
   * become request headers — HTTP header names are case-insensitive, so the
   * lowercasing is harmless. The client is built lazily on the EXECUTOR,
-  * once per partition reader (the connector instantiates the provider
-  * per-partition), so connections/timeouts live where the fetch runs and
-  * nothing here needs to be serializable-stateful.
+  * once per date: the connector instantiates the provider once per
+  * partition reader, and a scan is one partition, so the date's
+  * concurrent fetches share one client (`HttpClient` is thread-safe).
+  * Connections/timeouts live where the fetch runs and nothing here needs
+  * to be serializable-stateful.
   *
   * No live endpoint in CI (the sandbox has no egress), but the provider IS
   * driven end-to-end over a real socket: CovidReportSourceSpec stands up an

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import graft.ops.{CovidOps, Dims, Mart}
@@ -73,8 +74,8 @@ class CovidLandingSpec extends SparkSpec {
   }
 
   test("the landed partition equals the unlanded composition, in one file") {
-    // through the connector: one input partition per country, so one file
-    // per date is the pipeline's doing (the fixture stage is one partition)
+    // through the connector, whose reports are fetched concurrently: the
+    // file holds every country's rows, ranked in one task
     val ds = "2023-03-02"
     val lake = freshLake("graft_equiv")
     CovidPipeline.runRange(spark, ds, ds, lake, counted)
@@ -90,16 +91,19 @@ class CovidLandingSpec extends SparkSpec {
     assert(parts.length === 1)
   }
 
-  /** (jobs, SQL executions) that `body` runs, counted with the bus drained
-    * on both sides. */
-  test("a connector date is one SQL execution of 2 jobs: the extract stage and the keyed write") {
+  test("a connector date is one SQL execution of 1 job and 1 task, and compiles no new class") {
+    // fetch, parse, rank and write run in one task: the scan is one
+    // partition, the connector answers the date predicate (no date
+    // literal in generated code), and the rank reads through coalesce(1)
     val lake = freshLake("graft_jobs")
     CovidPipeline.runRange(spark, "2023-03-01", "2023-03-01", lake, counted)
     CountingPayloadProvider.calls.set(0)
-    val counts = jobsAndExecutions {
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val counts = jobsExecutionsAndTasks {
       CovidPipeline.runRange(spark, "2023-03-02", "2023-03-02", lake, counted)
     }
-    assert(counts === ((2, 1)))
+    assert(counts === ((1, 1, 1)))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles0)
     assert(CountingPayloadProvider.calls.get === 5)
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
+import graft.ops.CovidOps
 import graft.pipeline.{CovidFixture, CovidPipeline}
 import graft.sources.CovidPayloadProvider
 
@@ -30,14 +31,24 @@ final class ConfiguredStubProvider(options: Map[String, String])
       options.getOrElse("header.x-api-key", "?")}","iso":"$iso"}"""
 }
 
-/** DSv2 connector: fan-out partitioning, partition-level filter pushdown
-  * (countries prune before any "fetch"), column pruning, and end-to-end
-  * equivalence with the in-memory stage fixture. */
+/** DSv2 connector: one partition per scan whose reader fetches every report
+  * concurrently, pushdown that prunes reports before any "fetch" (iso,
+  * date, LIMIT, columns), and end-to-end equivalence with the in-memory
+  * stage fixture. */
 class CovidReportSourceSpec extends SparkSpec {
 
   private def src = spark.read
     .format("graft.sources.CovidReportSource")
     .option("date", "2023-03-02")
+
+  /** The source through [[CountingPayloadProvider]], and the fetches
+    * `body` makes with it. */
+  private def counted = src.option("payloadProvider", classOf[CountingPayloadProvider].getName)
+  private def fetches(body: => Unit): Long = {
+    CountingPayloadProvider.calls.set(0)
+    body
+    CountingPayloadProvider.calls.get
+  }
 
   test("fixture JSON keeps its key order, NULL province and number text") {
     // both pinned from the string-built fixture this codec replaced
@@ -54,36 +65,63 @@ class CovidReportSourceSpec extends SparkSpec {
     assert(sha === "2b1f47242c27e35e3635850f802e72bb51c45ffee393f9eb498ed6556e710b6d")
   }
 
-  test("one input partition per country; rows match the fixture") {
-    val df = src.load()
-    assert(df.rdd.getNumPartitions === 5)
+  private def batchScan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get
+
+  test("one input partition per scan; rows match the fixture") {
+    val df = counted.load()
+    assert(df.rdd.getNumPartitions === 1)
     val fix = CovidFixture.stage(spark)
-    assert(df.collect().toSet === fix.collect().toSet)
+    assert(fetches { assert(df.collect().toSet === fix.collect().toSet) } === 5)
   }
 
-  test("iso filter prunes partitions at the source") {
-    val df = src.load().filter(col("iso_country") === "RUS")
+  test("iso filter prunes reports at the source: one fetch") {
+    val df = counted.load().filter(col("iso_country") === "RUS")
     assert(df.rdd.getNumPartitions === 1)
-    assert(df.count() === 1)
+    assert(fetches { assert(df.collect().length === 1) } === 1)
     // pushdown is visible in the scan description
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("countries=Set(RUS)"), p.take(500))
   }
 
   test("column pruning reaches the reader (json_data not built)") {
-    val df = src.load().select("iso_country", "date_of_data")
+    val df = counted.load().select("iso_country", "date_of_data")
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("columns=date_of_data,iso_country"), p.take(500))
-    assert(df.count() === 5)
+    assert(fetches { assert(df.collect().length === 5) } === 0)
   }
 
-  test("LIMIT pushes to the source: only the first n partitions are planned") {
-    val df = src.load().limit(2)
-    assert(df.count() === 2)
-    val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    assert(scan.inputPartitions.length === 2) // 3 countries never planned
+  test("LIMIT pushes to the source: only the first n reports are fetched") {
+    val df = counted.load().limit(2)
+    assert(fetches { assert(df.collect().length === 2) } === 2)
+    assert(batchScan(df).inputPartitions.length === 1) // 3 countries never fetched
+  }
+
+  test("date pushdown: the connector answers date_of_data = d, no Filter stays above it") {
+    def dateFilters(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec
+            if f.condition.references.exists(_.name == "date_of_data") => f
+      }
+    // control: over a stage that cannot answer it, the Filter is found
+    assert(dateFilters(CovidOps.forDate("2023-03-02")(CovidFixture.stage(spark))).nonEmpty)
+    // the pushed value is a java.sql.Date or, with the Java 8 API on, a LocalDate
+    val java8 = "spark.sql.datetime.java8API.enabled"
+    val before = spark.conf.get(java8)
+    try for (on <- Seq("false", "true")) {
+      spark.conf.set(java8, on)
+      // read for one date, filtered to another: no report, no fetch
+      val other = CovidOps.forDate("2023-03-03")(counted.load())
+      assert(fetches { assert(other.collect().isEmpty) } === 0)
+      assert(dateFilters(other).isEmpty, other.queryExecution.executedPlan.toString)
+      assert(batchScan(other).inputPartitions.isEmpty)
+      // filtered to its own date: every report, still no Filter
+      val same = CovidOps.forDate("2023-03-02")(counted.load())
+      assert(fetches { assert(same.collect().length === 5) } === 5)
+      assert(dateFilters(same).isEmpty, same.queryExecution.executedPlan.toString)
+    } finally spark.conf.set(java8, before)
   }
 
   test("payloadProvider option injects a custom fetch (the S1 HTTP seam)") {
@@ -132,33 +170,47 @@ class CovidReportSourceSpec extends SparkSpec {
     * api-key header. */
   private def withHttpFixture(test: (String, java.util.concurrent.ConcurrentLinkedQueue[(String, String)]) => Unit): Unit = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    withHttpServer { (iso, ex, respond) =>
+      seen.add(Option(ex.getRequestURI.getQuery).getOrElse("") ->
+        Option(ex.getRequestHeaders.getFirst("X-Rapidapi-Key")).orNull)
+      iso match {
+        case "CHN" => respond(503, "upstream sad")
+        case "IND" => Thread.sleep(3000); respond(200, """{"data":[]}""")
+        case _ => respond(200, envelope(iso))
+      }
+    }(url => test(url, seen))
+  }
+
+  /** The fixture envelope the API serves for one country on 2023-03-02. */
+  private def envelope(iso: String): String = {
+    val ci = CovidFixture.isoCountries.indexWhere(_._1 == iso)
+    CovidFixture.envelope("2023-03-02", iso, CovidFixture.isoCountries(ci)._2, ci, 48)
+  }
+
+  /** An in-JVM server on 127.0.0.1 whose `/reports` handler gets each
+    * request's `iso` parameter, the exchange and a responder; its
+    * executor has a thread for every country's request at once. */
+  private def withHttpServer(
+      handle: (String, com.sun.net.httpserver.HttpExchange, (Int, String) => Unit) => Unit)(
+      test: String => Unit): Unit = {
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/reports", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val q = Option(ex.getRequestURI.getQuery).getOrElse("")
-      seen.add(q -> Option(ex.getRequestHeaders.getFirst("X-Rapidapi-Key")).orNull)
-      val iso = q.split("&").collectFirst {
+      val iso = Option(ex.getRequestURI.getQuery).getOrElse("").split("&").collectFirst {
         case kv if kv.startsWith("iso=") => kv.stripPrefix("iso=")
       }.getOrElse("")
-      def respond(code: Int, body: String): Unit = {
+      handle(iso, ex, (code, body) => {
         val bytes = body.getBytes("UTF-8")
         ex.sendResponseHeaders(code, bytes.length)
         ex.getResponseBody.write(bytes)
         ex.close()
-      }
-      iso match {
-        case "CHN" => respond(503, "upstream sad")
-        case "IND" => Thread.sleep(3000); respond(200, """{"data":[]}""")
-        case _ =>
-          val (is, country) = CovidFixture.isoCountries.find(_._1 == iso).get
-          val ci = CovidFixture.isoCountries.indexWhere(_._1 == iso)
-          respond(200, CovidFixture.envelope("2023-03-02", is, country, ci, 48))
-      }
+      })
     })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(CovidFixture.isoCountries.size + 1)
+    server.setExecutor(pool)
     server.start()
-    try test(s"http://127.0.0.1:${server.getAddress.getPort}/reports", seen)
-    finally server.stop(0)
+    try test(s"http://127.0.0.1:${server.getAddress.getPort}/reports")
+    finally { server.stop(0); pool.shutdownNow() }
   }
 
   private def httpSrc(url: String) = src
@@ -227,6 +279,34 @@ class CovidReportSourceSpec extends SparkSpec {
       assert(chain(e).exists(
         _.isInstanceOf[java.net.http.HttpTimeoutException]),
         s"expected HttpTimeoutException in cause chain: $e")
+    }
+  }
+
+  test("HTTP provider: a date's five fetches are in flight together") {
+    // each request is answered only once all five have arrived, so a
+    // reader that fetched one report after another would get five 503s
+    // (a task retry would see the latch already open: count the 503s)
+    val arrived = new java.util.concurrent.CountDownLatch(CovidFixture.isoCountries.size)
+    val refused = new java.util.concurrent.atomic.AtomicInteger
+    withHttpServer { (iso, _, respond) =>
+      arrived.countDown()
+      if (arrived.await(10, java.util.concurrent.TimeUnit.SECONDS)) respond(200, envelope(iso))
+      else { refused.incrementAndGet(); respond(503, "fetched one at a time") }
+    } { url =>
+      val got = httpSrc(url).load().collect()
+      assert(refused.get === 0)
+      assert(got.map(_.getString(2)).toSeq === CovidFixture.isoCountries.map(_._1))
+      assert(got.forall(r => r.getString(3) === envelope(r.getString(2))))
+    }
+  }
+
+  test("HTTP provider: a failed fetch fails the task with the provider's own exception") {
+    withHttpFixture { (url, _) =>
+      val e = intercept[org.apache.spark.SparkException] {
+        httpSrc(url).load().filter(col("iso_country").isin("CHN", "RUS")).collect()
+      }
+      assert(e.getCause.isInstanceOf[IllegalStateException], s"unexpected cause: ${e.getCause}")
+      assert(e.getCause.getMessage.contains("HTTP 503 for (2023-03-02, CHN)"))
     }
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.shim
@@ -26,9 +27,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Jobs and SQL executions `body` starts, counted by a listener with the
     * bus drained before and after. */
   def jobsAndExecutions(body: => Unit): (Int, Int) = {
-    val jobs, executions = new AtomicInteger
+    val (jobs, executions, _) = jobsExecutionsAndTasks(body)
+    (jobs, executions)
+  }
+
+  /** [[jobsAndExecutions]] and the tasks `body` starts. */
+  def jobsExecutionsAndTasks(body: => Unit): (Int, Int, Int) = {
+    val jobs, executions, tasks = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = { tasks.incrementAndGet(); () }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
         case _ => ()
@@ -38,7 +46,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.addSparkListener(listener)
     try { body; shim.drainListenerBus(spark) }
     finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get, executions.get)
+    (jobs.get, executions.get, tasks.get)
   }
 
   /** Staging directories a staged partition replace left under a lake. */
